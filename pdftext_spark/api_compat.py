@@ -99,10 +99,12 @@ def table_output(payloads: list, table_inputs: Optional[list] = None,
         "Number of pages and table inputs must match"
     import json
 
-    from pdftext_spark.core.payload import maybe_parse_payload
+    from pdftext_spark.core.payload import maybe_parse_payload_raw
     patched = []
     for i, ti in zip(page_range, table_inputs):
-        obj = maybe_parse_payload(payloads[i]) or {}
+        p = payloads[i]
+        obj = maybe_parse_payload_raw(
+            None if p is None else p.encode("utf-8", "surrogatepass")) or {}
         obj["tables"] = ti["tables"]
         obj["img_size"] = ti["img_size"]
         patched.append(json.dumps(obj, ensure_ascii=False))

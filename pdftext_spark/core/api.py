@@ -6,10 +6,12 @@ through the boilerplate-strip/main-content scorer; everything else is a
 char-stream payload (or plain prose, which degrades to a synthesized
 monospace layout) and goes through the segmentation kernel.
 
-Two consumers share the routing/segmentation core (`route_batch`):
-- `process_batch` → per-turn dicts (tests, the keep_chars path);
-- `core/arrow_out.py` → columnar pyarrow assembly straight from
-  segmentation offsets (the Spark fast path — no per-span Python dicts,
+Two consumers share the routing/segmentation core (`route_batch`), which
+reads an Arrow string column — one payload parser for both:
+- `process_batch` → per-turn dicts (tests, the keep_chars path); it
+  converts its `list[str]` to that column first;
+- the Spark kernel (operators/extract.py) → columnar pyarrow output
+  built straight from segmentation offsets (no per-span Python dicts,
   no pandas→Arrow conversion).
 """
 
@@ -19,13 +21,13 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 import numpy as np
+import pyarrow as pa
 
 from pdftext_spark.config import ExtractConfig
 from pdftext_spark.core.assemble import plain_text_batch, struct_page
 from pdftext_spark.core.html_main import extract_main_text
 from pdftext_spark.core.links import merge_turn_links
 from pdftext_spark.core.payload import (
-    decode_any_turn,
     decode_turn,
     maybe_parse_payload_raw,
     prose_to_decoded,
@@ -73,15 +75,21 @@ def _arrow_text_view(texts):
     decode of the whole batch and orjson's internal str→UTF-8 re-encode
     (~45% of the scan-and-parse cost on a payload corpus). str_at(i)
     decodes a single row on demand for the HTML/prose minority paths;
-    it produces exactly `to_pylist()[i]` (same UTF-8 decode)."""
-    import pyarrow as pa
+    it produces exactly `to_pylist()[i]` (same UTF-8 decode).
 
+    Only string and large_string are read: other layouts (string_view,
+    dictionary) keep their bytes elsewhere, and reading their buffers as
+    offsets + data would misparse rows instead of failing."""
     if isinstance(texts, pa.ChunkedArray):
         texts = texts.combine_chunks()
-    if texts.type == pa.large_string():
+    typ = getattr(texts, "type", None)
+    if typ == pa.large_string():
         odtype, owidth = np.int64, 8
-    else:
+    elif typ == pa.string():
         odtype, owidth = np.int32, 4
+    else:
+        raise TypeError("text column must be a pyarrow string or "
+                        f"large_string array, got {typ or type(texts)}")
     bufs = texts.buffers()
     if bufs[1] is None:
         # the Arrow spec lets a length-0 array omit its offsets buffer
@@ -110,36 +118,27 @@ def _arrow_text_view(texts):
 
 def route_batch(texts, roles: list, turn_idxs: list,
                 cfg: ExtractConfig = ExtractConfig()) -> RoutedBatch:
-    """`texts` is either a list[str | None] or a pyarrow (large_)string
-    array; the Arrow form is the Spark fast path (zero-copy payload
-    parsing), the list form the plain-Python surface for tests/callers.
-    Outputs are identical — both parsers read the same UTF-8 bytes."""
+    """`texts` is a pyarrow string or large_string array (or a chunked
+    one); payloads are parsed zero-copy from its UTF-8 buffer."""
     n = len(texts)
     outputs: list[Optional[TurnOutput]] = [None] * n
-
-    is_arrow = not isinstance(texts, (list, tuple))
-    if is_arrow:
-        raw_at, str_at = _arrow_text_view(texts)
+    raw_at, str_at = _arrow_text_view(texts)
 
     doc_pos: list[int] = []
     decoded = []
     for i in range(n):
         if roles[i] == "tool":
             try:
-                main = extract_main_text(
-                    (str_at(i) if is_arrow else texts[i]) or "")
+                main = extract_main_text(str_at(i) or "")
             except Exception as exc:  # defensive: never kill the batch
                 outputs[i] = TurnOutput(text="", is_html=True, error=repr(exc))
                 continue
             outputs[i] = TurnOutput(text=main, is_html=True)
         else:
             try:
-                if is_arrow:
-                    obj = maybe_parse_payload_raw(raw_at(i))
-                    dt = (prose_to_decoded(str_at(i) or "") if obj is None
-                          else decode_turn(obj, cfg.quote_loosebox))
-                else:
-                    dt = decode_any_turn(texts[i], cfg.quote_loosebox)
+                obj = maybe_parse_payload_raw(raw_at(i))
+                dt = (prose_to_decoded(str_at(i) or "") if obj is None
+                      else decode_turn(obj, cfg.quote_loosebox))
             except Exception as exc:
                 # A bad payload must not kill the whole Arrow batch at scale;
                 # route it to the error/lineage channel instead.
@@ -200,7 +199,12 @@ def route_batch(texts, roles: list, turn_idxs: list,
 
 def process_batch(texts: list, roles: list, turn_idxs: list,
                   cfg: ExtractConfig = ExtractConfig()) -> list[TurnOutput]:
-    rb = route_batch(texts, roles, turn_idxs, cfg)
+    # surrogatepass + a binary→string view: a lone surrogate reaches
+    # route_batch as invalid UTF-8 and fails its own turn's decode,
+    # where pa.array(texts, pa.string()) would fail the whole call
+    arr = pa.array([None if t is None else t.encode("utf-8", "surrogatepass")
+                    for t in texts], pa.binary()).view(pa.string())
+    rb = route_batch(arr, roles, turn_idxs, cfg)
     seg = rb.seg
     for local, i in enumerate(rb.doc_pos):
         page = None

@@ -66,31 +66,13 @@ except ImportError:  # pragma: no cover - env without orjson
     _fastjson = None
 
 
-def maybe_parse_payload(text: str) -> Optional[dict]:
-    if not text or text[0] != "{":
-        return None
-    obj = None
-    if _fastjson is not None:
-        try:
-            obj = _fastjson.loads(text)
-        except ValueError:
-            obj = None  # stricter than stdlib (NaN, >64-bit ints): retry below
-    if obj is None:
-        try:
-            obj = json.loads(text)
-        except ValueError:
-            return None
-    if isinstance(obj, dict) and obj.get("kind") == "chars":
-        return obj
-    return None
-
-
 def maybe_parse_payload_raw(raw) -> Optional[dict]:
-    """`maybe_parse_payload` over a UTF-8 bytes-like view (memoryview of
-    the Arrow string buffer). Skipping the Arrow→str decode AND orjson's
-    internal str→UTF-8 re-encode is ~45% of the scan-and-parse cost on a
-    payload corpus; both parsers decode the same UTF-8 bytes, so the
-    result is identical to the str form on any valid Arrow string."""
+    """The payload dict of a turn, or None when the turn is not a chars
+    payload (prose, HTML, other JSON, invalid JSON). `raw` is a UTF-8
+    bytes-like view — in the kernel a memoryview of the Arrow string
+    buffer: skipping the Arrow→str decode AND orjson's internal
+    str→UTF-8 re-encode is ~45% of the scan-and-parse cost on a payload
+    corpus."""
     if not raw or raw[0] != 0x7B:  # '{'
         return None
     obj = None
@@ -101,7 +83,10 @@ def maybe_parse_payload_raw(raw) -> Optional[dict]:
             obj = None  # stricter than stdlib (NaN, >64-bit ints): retry below
     if obj is None:
         try:
-            obj = json.loads(bytes(raw))
+            # strict decode: json.loads(bytes) decodes with surrogatepass,
+            # passing a lone surrogate on to segmentation, where it fails
+            # the whole batch instead of this turn
+            obj = json.loads(str(raw, "utf-8"))
         except ValueError:
             return None
     if isinstance(obj, dict) and obj.get("kind") == "chars":
@@ -315,14 +300,6 @@ def prose_to_decoded(text: str, page_width: float = 612.0,
         font_id=np.full(n, 0, dtype=np.int32),
         fonts=[{"name": "Mono", "flags": 0, "size": font_size, "weight": 400}],
     )
-
-
-def decode_any_turn(text: str, quote_loosebox: bool = True) -> DecodedTurn:
-    """Decode a payload turn, or synthesize a layout for plain prose."""
-    obj = maybe_parse_payload(text)
-    if obj is None:
-        return prose_to_decoded(text if text is not None else "")
-    return decode_turn(obj, quote_loosebox=quote_loosebox)
 
 
 def payload_json(obj: dict) -> str:

@@ -2,8 +2,13 @@
 
 Plan shape (SURVEY.md §3.1 "Spark lifecycle equivalent"):
 
-    scan → repartition(hash(conv_id, turn_idx)) → mapInArrow(kernel) →
+    scan → repartition(hash(conv_id, turn_idx)) → Arrow kernel →
     [tiny refs aggregation ⨝ broadcast back] → sink
+
+Every operator here is a thin caller of one kernel entry (`_kernel`):
+it picks the input projection, the output schema and a per-batch
+`emit`; the entry alone projects, salts and maps each Arrow batch
+through `core.api.route_batch`.
 
 Scale notes (the parts that must survive 1000 executors / 100 TB):
 - **Skew**: repartitioning on (conv_id, turn_idx) spreads a million-turn
@@ -16,9 +21,9 @@ Scale notes (the parts that must survive 1000 executors / 100 TB):
   side-table of link registrations — a few bytes per linked turn — and
   joined back with broadcast joins; the char payloads never shuffle again
   (operators/refs.py).
-- **Python boundary**: exactly one Arrow round-trip for the kernel (the
-  default links_via="persist" caches it); url/ref rewriting is a pure
-  JVM-side columnar projection over the cache.
+- **Python boundary**: exactly one Arrow round-trip for the kernel
+  (extract() caches its output for the refs registry); url/ref
+  rewriting is a pure JVM-side columnar projection over the cache.
 """
 
 from __future__ import annotations
@@ -26,13 +31,11 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pdftext_spark.config import ExtractConfig
+from pdftext_spark.operators.refs import DEFAULT_BROADCAST_THRESHOLD, resolve_refs
 from pdftext_spark.operators.schema import EXTRACTED
-
-# sentinel: "use refs.DEFAULT_BROADCAST_THRESHOLD" (None means "no gate")
-_USE_DEFAULT = object()
 
 # Shuffle exchanges only — BroadcastExchange does NOT repartition the
 # probe side, so a broadcast-join input still deserves the salt.
@@ -45,78 +48,33 @@ def _has_shuffle_exchange(plan_text: str) -> bool:
     return _SHUFFLE_EXCHANGE.search(plan_text) is not None
 
 
-def _arrow_kernel(cfg: ExtractConfig, target_schema):
-    """mapInArrow fast path: RecordBatch in → RecordBatch out, nested
-    arrays built straight from segmentation offsets (core/arrow_out.py)."""
-    def run(batches):
-        from pdftext_spark.core.api import route_batch
-        from pdftext_spark.core.arrow_out import assemble_record_batch
-        for batch in batches:
-            def col(name):
-                return batch.column(batch.schema.get_field_index(name))
-            rb = route_batch(col("text"), col("role").to_pylist(),
-                             col("turn_idx").to_pylist(), cfg)
-            yield assemble_record_batch(batch, rb, cfg, target_schema)
-    return run
+def _kernel(transcripts: DataFrame, columns: tuple, cfg: ExtractConfig,
+            schema: T.StructType, emit) -> DataFrame:
+    """The one kernel entry: project `columns`, salt, and turn every
+    Arrow batch into `emit(batch, rb, target)`, where rb is the batch's
+    `route_batch` result and target the Arrow form of `schema`.
 
-
-def link_registrations(transcripts: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """OPT-IN light pre-pass producing only (conv_id, turn_idx, link_dests)
-    for link-bearing turns (extract(links_via="prepass")). The `'"links"'`
-    substring filter is pushed into the parquet scan and selects a superset
-    of link-bearing payloads (~20% of rows here), so the X1 registry never
-    requires caching the heavy extraction output — at the price of decoding
-    link-bearing payloads twice (~15% of the struct pipeline). The default
-    path ("persist") runs the kernel once and caches it instead."""
-    import dataclasses
-
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    light_cfg = dataclasses.replace(cfg, emit_struct=False, emit_tables=False,
-                                    emit_plain=False)
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("link_dests", EXTRACTED["link_dests"].dataType),
-    ])
+    Catalyst cannot prune columns INTO the Python kernel, so callers pass
+    exactly the columns they read — extra input columns (e.g. `tool`)
+    would otherwise be scanned and, worse, shuffled by the salt."""
     from pyspark.sql.pandas.types import to_arrow_schema
     target = to_arrow_schema(schema)
 
     def run(batches):
         from pdftext_spark.core.api import route_batch
-        from pdftext_spark.core.arrow_out import LINK_DEST_PA
         for batch in batches:
-            def col(name):
-                return batch.column(batch.schema.get_field_index(name))
-            rb = route_batch(col("text"), col("role").to_pylist(),
-                             col("turn_idx").to_pylist(), light_cfg)
-            dests = [[] for _ in range(rb.n)]
-            for local, i in enumerate(rb.doc_pos):
-                if local in rb.regs_by_local:
-                    dests[i] = [
-                        {"ord": r[0], "gid": r[1], "dest_page": r[2],
-                         "x": r[3], "y": r[4]}
-                        for r in rb.regs_by_local[local]]
-            yield pa.RecordBatch.from_arrays(
-                [col("conv_id"), col("turn_idx"),
-                 pa.array(dests, type=LINK_DEST_PA)],
-                schema=target)
+            rb = route_batch(batch.column("text"),
+                             batch.column("role").to_pylist(),
+                             batch.column("turn_idx").to_pylist(), cfg)
+            yield emit(batch, rb, target)
 
-    cand = (transcripts.select("conv_id", "turn_idx", "role", "text")
-            .where(F.col("text").contains('"links"')
-                   & ~F.col("role").eqNullSafe("tool")))
-    # role filter: tool turns route to HTML extraction and can never
-    # register links — without it, tool HTML containing the substring
-    # "links" (class names, embedded JSON) would pay a full main-content
-    # scoring pass for output this pre-pass discards
-    return cand.mapInArrow(run, schema=schema)
+    salted = _apply_salt(transcripts.select(*columns), cfg,
+                         transcripts.sparkSession)
+    return salted.mapInArrow(run, schema=schema)
 
 
 def _apply_salt(transcripts: DataFrame, cfg: ExtractConfig, spark) -> DataFrame:
-    """Anti-skew salting of the kernel input, shared by every kernel
-    entry point (extract, plain_text_variants). Salting defeats
+    """Anti-skew salting of the kernel input (`_kernel`). Salting defeats
     conversation-clustered inputs (an Iceberg table bucketed by conv_id
     would put a mega-conversation in one task). When the scan already
     yields byte-balanced fine-grained splits — file sources split by
@@ -153,54 +111,81 @@ def _apply_salt(transcripts: DataFrame, cfg: ExtractConfig, spark) -> DataFrame:
 
 
 def extract(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig(),
-            resolve_links: bool = True, links_via: str = "persist",
-            broadcast_threshold: "int | None | object" = _USE_DEFAULT) -> DataFrame:
+            resolve_links: bool = True,
+            broadcast_threshold: int | None = DEFAULT_BROADCAST_THRESHOLD,
+            ) -> DataFrame:
     """Run the extraction kernel over a transcript table.
 
     Input columns: (conv_id, turn_idx, role, text, tool, ts) — the
     BASELINE.json input_hint contract.
 
-    links_via chooses how the X1 registry gets its link_dests side data:
-    - "persist" (default): ONE kernel pass, cached MEMORY_AND_DISK; the
-      registry aggregates the tiny cached link_dests column (columnar
-      cache prunes the heavy page column from that scan) and the rewrite
-      joins back against the same cache. The right trade on anything with
-      working storage — no payload is ever decoded twice.
-    - "prepass": no caching; a second, filtered light kernel pass over the
-      `'"links"'` superset supplies registrations (link_registrations).
-      For pipelines where caching the extracted output is off the table
-      and a ~15% decode tax is cheaper than the storage.
+    With resolve_links, the X1 registry is built from the kernel output
+    itself: ONE kernel pass, cached MEMORY_AND_DISK; the registry
+    aggregates the tiny cached link_dests column (the columnar cache
+    prunes the heavy page column from that scan) and the rewrite joins
+    back against the same cache, so no payload is ever decoded twice.
 
     broadcast_threshold passes through to refs.resolve_refs: the default
-    gate counts link registrations EAGERLY at call time (one Spark job;
-    in persist mode it also materializes the kernel cache the first
-    consumer would have paid for anyway). Pass None for a fully lazy
-    plan with unconditionally hinted broadcasts — appropriate when
-    composing plans for explain()/inspection or when the corpus is known
-    not to be link-dense."""
-    spark = transcripts.sparkSession
-    # Catalyst cannot prune columns INTO the Python kernel, so project the
-    # kernel's contract explicitly — extra input columns (e.g. `tool`)
-    # would otherwise be scanned and, worse, shuffled by the salt.
-    transcripts = transcripts.select("conv_id", "turn_idx", "role", "text", "ts")
-    salted = _apply_salt(transcripts, cfg, spark)
-    from pyspark.sql.pandas.types import to_arrow_schema
-    target = to_arrow_schema(EXTRACTED)
-    out = salted.mapInArrow(_arrow_kernel(cfg, target), schema=EXTRACTED)
+    gate counts link registrations EAGERLY at call time (one Spark job
+    that also materializes the kernel cache the first consumer would have
+    paid for anyway). Pass None for a fully lazy plan with
+    unconditionally hinted broadcasts — appropriate when composing plans
+    for explain()/inspection or when the corpus is known not to be
+    link-dense."""
+    def emit(batch, rb, target):
+        from pdftext_spark.core.arrow_out import assemble_record_batch
+        return assemble_record_batch(batch, rb, cfg, target)
+
+    out = _kernel(transcripts, ("conv_id", "turn_idx", "role", "text", "ts"),
+                  cfg, EXTRACTED, emit)
     if resolve_links and not cfg.disable_links:
-        from pdftext_spark.operators.refs import (
-            DEFAULT_BROADCAST_THRESHOLD,
-            resolve_refs,
-        )
-        thr = (DEFAULT_BROADCAST_THRESHOLD
-               if broadcast_threshold is _USE_DEFAULT else broadcast_threshold)
-        if links_via == "prepass":
-            regs = link_registrations(transcripts, cfg)
-            out = resolve_refs(out, registrations=regs,
-                               broadcast_threshold=thr)
-        else:
-            out = resolve_refs(out, persist=True, broadcast_threshold=thr)
+        out = resolve_refs(out, persist=True,
+                           broadcast_threshold=broadcast_threshold)
     return out
+
+
+def _fill_text(rb, render) -> list:
+    """One output string per batch row: the routed text of html/error
+    rows, then `render(rb)`'s string per doc turn at its row."""
+    out: list = [None] * rb.n
+    for i, o in enumerate(rb.outputs):
+        if o is not None:
+            out[i] = o.text
+    if rb.doc_pos:
+        for i, text in zip(rb.doc_pos, render(rb)):
+            out[i] = text
+    return out
+
+
+def _text_kernel(transcripts: DataFrame, cfg: ExtractConfig,
+                 renders: dict) -> DataFrame:
+    """(conv_id, turn_idx, *renders) — one string column per named
+    render of the routed batch. The kernel skips nested page/table
+    assembly (emit_struct/emit_tables off) — the Python-side analog of
+    the column pruning Catalyst applies outside the UDF — and emits ONLY
+    these columns: a full-EXTRACTED assembly would build null pages,
+    empty table/dest arrays and count columns per row just for a
+    downstream select to drop them, paying per-row Arrow work on both
+    sides of the boundary."""
+    import dataclasses
+
+    cfg = dataclasses.replace(cfg, emit_struct=False, emit_tables=False,
+                              disable_links=True, emit_plain=True)
+    schema = T.StructType(
+        [T.StructField("conv_id", T.StringType()),
+         T.StructField("turn_idx", T.IntegerType())]
+        + [T.StructField(name, T.StringType()) for name in renders])
+
+    def emit(batch, rb, target):
+        import pyarrow as pa
+        return pa.RecordBatch.from_arrays(
+            [batch.column("conv_id"), batch.column("turn_idx")]
+            + [pa.array(_fill_text(rb, render), type=pa.string())
+               for render in renders.values()],
+            schema=target)
+
+    return _kernel(transcripts, ("conv_id", "turn_idx", "role", "text"),
+                   cfg, schema, emit)
 
 
 def plain_text_variants(transcripts: DataFrame,
@@ -218,104 +203,23 @@ def plain_text_variants(transcripts: DataFrame,
     HTML/tool turns have no layout, so all three columns agree there."""
     import dataclasses
 
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
+    from pdftext_spark.core.assemble import plain_text_batch
 
     # sort/hyphens reset explicitly: the three output columns are
     # DEFINED as (default render, sorted, keep-hyphens) regardless of
     # the caller's flags — without the reset, cfg.sort=True would make
     # the `text` column silently equal text_sorted
-    cfg = dataclasses.replace(cfg, emit_struct=False, emit_tables=False,
-                              disable_links=True, emit_plain=True,
-                              sort=False, hyphens=False)
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("text_sorted", T.StringType()),
-        T.StructField("text_keephyphens", T.StringType()),
-    ])
-    from pyspark.sql.pandas.types import to_arrow_schema
-    target = to_arrow_schema(schema)
-
-    def run(batches):
-        from pdftext_spark.core.api import route_batch
-        from pdftext_spark.core.assemble import plain_text_batch
-        for batch in batches:
-            def col(name):
-                return batch.column(batch.schema.get_field_index(name))
-            rb = route_batch(col("text"), col("role").to_pylist(),
-                             col("turn_idx").to_pylist(), cfg)
-            plain: list = [None] * rb.n
-            srt: list = [None] * rb.n
-            hyp: list = [None] * rb.n
-            for i, o in enumerate(rb.outputs):
-                if o is not None:
-                    plain[i] = srt[i] = hyp[i] = o.text
-            if rb.seg is not None:
-                srt_l = plain_text_batch(rb.seg, sort=True,
-                                         sort_tolerance=cfg.sort_tolerance)
-                hyp_l = plain_text_batch(rb.seg, hyphens=True)
-                for local, i in enumerate(rb.doc_pos):
-                    plain[i] = rb.plains[local]
-                    srt[i] = srt_l[local]
-                    hyp[i] = hyp_l[local]
-            yield pa.RecordBatch.from_arrays(
-                [col("conv_id"), col("turn_idx"),
-                 pa.array(plain, type=pa.string()),
-                 pa.array(srt, type=pa.string()),
-                 pa.array(hyp, type=pa.string())],
-                schema=target)
-
-    pruned = transcripts.select("conv_id", "turn_idx", "role", "text")
-    salted = _apply_salt(pruned, cfg, transcripts.sparkSession)
-    return salted.mapInArrow(run, schema=schema)
+    cfg = dataclasses.replace(cfg, sort=False, hyphens=False)
+    return _text_kernel(transcripts, cfg, {
+        "text": lambda rb: rb.plains,
+        "text_sorted": lambda rb: plain_text_batch(
+            rb.seg, sort=True, sort_tolerance=cfg.sort_tolerance),
+        "text_keephyphens": lambda rb: plain_text_batch(rb.seg, hyphens=True),
+    })
 
 
 def plain_text(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig()) -> DataFrame:
     """Flagship projection: (conv_id, turn_idx, text) — the
-    paginated_plain_text_output analog (extraction.py:75-80). The kernel
-    skips nested page/table assembly (emit_struct/emit_tables off) — the
-    Python-side analog of the column pruning Catalyst applies outside
-    the UDF — and emits ONLY the three output columns: the old
-    full-EXTRACTED assembly built null pages, empty table/dest arrays,
-    and count columns per row just for a downstream select to drop
-    them, paying per-row Arrow work on both sides of the boundary."""
-    import dataclasses
-
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    cfg = dataclasses.replace(cfg, emit_struct=False, emit_tables=False,
-                              disable_links=True, emit_plain=True)
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("text", T.StringType()),
-    ])
-    from pyspark.sql.pandas.types import to_arrow_schema
-    target = to_arrow_schema(schema)
-
-    def run(batches):
-        from pdftext_spark.core.api import route_batch
-        for batch in batches:
-            def col(name):
-                return batch.column(batch.schema.get_field_index(name))
-            rb = route_batch(col("text"), col("role").to_pylist(),
-                             col("turn_idx").to_pylist(), cfg)
-            out: list = [None] * rb.n
-            for i, o in enumerate(rb.outputs):
-                if o is not None:
-                    out[i] = o.text
-            for local, i in enumerate(rb.doc_pos):
-                out[i] = rb.plains[local]
-            yield pa.RecordBatch.from_arrays(
-                [col("conv_id"), col("turn_idx"),
-                 pa.array(out, type=pa.string())],
-                schema=target)
-
-    pruned = transcripts.select("conv_id", "turn_idx", "role", "text")
-    salted = _apply_salt(pruned, cfg, transcripts.sparkSession)
-    return salted.mapInArrow(run, schema=schema)
+    paginated_plain_text_output analog (extraction.py:75-80), rendered
+    with the caller's sort/hyphens flags."""
+    return _text_kernel(transcripts, cfg, {"text": lambda rb: rb.plains})

@@ -87,29 +87,18 @@ DEFAULT_BROADCAST_THRESHOLD = 5_000_000
 
 
 def resolve_refs(extracted: DataFrame, persist: bool = True,
-                 registrations: DataFrame | None = None,
                  broadcast_threshold: int | None = DEFAULT_BROADCAST_THRESHOLD,
                  ) -> DataFrame:
-    # The registry needs the link_dests side data. Three supply modes:
-    # 1. `registrations` given (operators/extract.py's light pre-pass over
-    #    only link-bearing turns) — the heavy output is consumed exactly
-    #    once; the small registrations frame is persisted since the
-    #    registry build + size gate read it several times;
-    # 2. persist=True — registry aggregated from `extracted` itself, which
-    #    is persisted so the kernel doesn't re-run per consumer (tests,
-    #    ad-hoc use);
-    # 3. persist=False — caller already materialized `extracted` to storage
-    #    (streaming/incremental.py's staged read-back).
+    # The registry is aggregated from `extracted`'s own link_dests column.
+    # persist=True caches `extracted` so the kernel runs once for the
+    # registry build, the size gate and the rewrite (extract(), tests,
+    # ad-hoc use); persist=False means the caller already materialized
+    # it to storage (streaming/incremental.py's staged read-back).
     persisted: list[DataFrame] = []
-    if registrations is not None:
-        reg_source = registrations.persist()
-        persisted.append(reg_source)
-    else:
-        if persist:
-            extracted = extracted.persist()
-            persisted.append(extracted)
-        reg_source = extracted
-    registry = build_registry(reg_source)
+    if persist:
+        extracted = extracted.persist()
+        persisted.append(extracted)
+    registry = build_registry(extracted)
 
     # per-turn url maps: placeholder '#goto|turn|gid' -> '#page-dest-idx'
     url_maps = (registry
@@ -124,7 +113,7 @@ def resolve_refs(extracted: DataFrame, persist: bool = True,
                 ))).alias("url_map")))
 
     # per-target-turn refs arrays (refs POINTING TO that turn)
-    targets = (_firsts(_registrations(reg_source))
+    targets = (_firsts(_registrations(extracted))
                .groupBy("conv_id", F.col("dest_page").alias("turn_idx"))
                .agg(F.sort_array(F.collect_list(F.struct("idx", "x", "y")))
                     .alias("page_refs")))
@@ -132,12 +121,12 @@ def resolve_refs(extracted: DataFrame, persist: bool = True,
     # Broadcast size gate (VERDICT r2): a hard-forced broadcast on a
     # link-dense corpus OOMs the driver instead of degrading. The
     # registration count is a column-pruned scan of the tiny link_dests
-    # column — cheap against the already-persisted/staged reg_source
+    # column — cheap against the already-persisted/staged `extracted`
     # (measured ~0.2 s on the 110k-turn tier, interleaved best-of-5).
     do_broadcast = True
     if broadcast_threshold is not None:
-        n_regs = (reg_source.select(F.coalesce(F.size("link_dests"), F.lit(0))
-                                    .alias("n"))
+        n_regs = (extracted.select(F.coalesce(F.size("link_dests"), F.lit(0))
+                                   .alias("n"))
                   .agg(F.sum("n")).collect()[0][0] or 0)
         do_broadcast = n_regs <= broadcast_threshold
 
@@ -215,12 +204,11 @@ def resolve_refs(extracted: DataFrame, persist: bool = True,
 
 
 def release_persisted(df: DataFrame, blocking: bool = False) -> int:
-    """Unpersist whatever resolve_refs persisted to build `df` — the
-    release seam for per-batch callers (notably extract(...,
-    links_via='prepass'), which persists a registrations frame per call;
-    a long-running service calls this after consuming each batch or its
-    storage memory grows without bound). Safe to call at any time: the
-    plan stays valid and recomputes if re-executed."""
+    """Unpersist whatever resolve_refs persisted to build `df` (the
+    cached kernel output of extract()) — the release seam for per-batch
+    callers: a long-running service calls this after consuming each
+    batch or its storage memory grows without bound. Safe to call at any
+    time: the plan stays valid and recomputes if re-executed."""
     n = 0
     for f in getattr(df, "_pdftext_persisted", []):
         try:

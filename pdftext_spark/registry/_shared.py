@@ -72,7 +72,7 @@ def unpersist_tier(spark: SparkSession, sf_dir: str | None = None) -> int:
 
 def _extracted_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full extraction over the fixture tier matching sf_dir. extract()
-    itself caches the single kernel pass (links_via="persist"), so the
+    itself caches its single kernel pass for the refs registry, so the
     several extraction queries share one kernel run per session; only the
     cheap JVM-side ref-rewrite projection re-runs per consumer. No outer
     persist — that would hold a second copy of the heavy page column.

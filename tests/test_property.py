@@ -260,7 +260,7 @@ def _arrow_rows(texts, cfg):
         pa.array(texts),
         pa.array([0] * n, target.field("ts").type),
     ], names=["conv_id", "turn_idx", "role", "text", "ts"])
-    rb = route_batch(texts, ["user"] * n, ids, cfg)
+    rb = route_batch(pa.array(texts), ["user"] * n, ids, cfg)
     return assemble_record_batch(batch, rb, cfg, target).to_pylist()
 
 

@@ -136,9 +136,9 @@ def test_unpersist_tier_releases_extract_cache(spark):
     assert _n_persistent_rdds(spark) == base
 
 
-def test_release_persisted_frees_prepass_registrations(spark):
-    """extract(links_via='prepass') persists a registrations frame per
-    call; release_persisted(df) is the per-batch seam that frees it."""
+def test_release_persisted_frees_kernel_cache(spark):
+    """extract() persists its kernel output per call for the refs
+    registry; release_persisted(df) is the per-batch seam that frees it."""
     from pdftext_spark.config import ExtractConfig
     from pdftext_spark.operators.extract import extract
     from pdftext_spark.operators.refs import release_persisted
@@ -146,7 +146,7 @@ def test_release_persisted_frees_prepass_registrations(spark):
 
     base = _n_persistent_rdds(spark)
     df = extract(spark.read.parquet(transcripts_path("sf0.001")),
-                 ExtractConfig(), links_via="prepass")
+                 ExtractConfig())
     assert df.count() > 0
     assert _n_persistent_rdds(spark) > base
     assert release_persisted(df) >= 1

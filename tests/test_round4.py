@@ -1,4 +1,4 @@
-"""Round-4 regression tests: the four ADVICE fixes (null-role prepass,
+"""Round-4 regression tests: the four ADVICE fixes (null-role link turns,
 shuffle-exchange salt probe, HTML unquoted-value self-close, font-key
 docstring) plus new round-4 operators as they land."""
 
@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from pdftext_spark.config import ExtractConfig
 from pdftext_spark.core.html_main import _build_tree, _self_close, extract_main_text
-from pdftext_spark.operators.extract import _has_shuffle_exchange, link_registrations
+from pdftext_spark.operators.extract import _has_shuffle_exchange, extract
 
 
 # ---------------------------------------------------------------- html
@@ -300,12 +300,11 @@ def test_curate_corpus_perplexity_gate(spark):
     assert got < ungated  # the gate dropped at least one kept doc
 
 
-# ------------------------------------------------------------- prepass
+# ----------------------------------------------------------- null role
 
-def test_null_role_turn_reaches_prepass(spark):
-    """A NULL-role turn routes to the PDF path and can register links;
-    the prepass candidate filter must not drop it (three-valued logic on
-    role != 'tool')."""
+def test_null_role_turn_registers_links(spark):
+    """A NULL-role turn routes to the PDF path and registers its links
+    (three-valued logic: NULL is not 'tool')."""
     payload = {
         "kind": "chars",
         "page_bbox": [0.0, 0.0, 612.0, 792.0],
@@ -323,9 +322,9 @@ def test_null_role_turn_reaches_prepass(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
-    regs = link_registrations(df, ExtractConfig()).collect()
-    assert len(regs) == 1 and regs[0]["turn_idx"] == 0
-    assert len(regs[0]["link_dests"]) == 1
+    rows = extract(df, ExtractConfig(), resolve_links=False).collect()
+    assert len(rows) == 1 and rows[0]["turn_idx"] == 0
+    assert len(rows[0]["link_dests"]) == 1
 
 
 # ---------------------------------------------------------- salt probe

@@ -113,18 +113,24 @@ def test_events_funnel_fold_matches_chained_min_semantics(spark, tmp_path):
 
 def test_plain_text_variants_one_pass_matches_single_mode(spark):
     """The folded 3-column render must equal the three single-mode
-    runs column-for-column (same kernel, flags applied per render)."""
+    runs column-for-column (same kernel, flags applied per render), and
+    its default column the struct extraction's text — all three callers
+    of the kernel entry agree per turn."""
     from pdftext_spark.config import ExtractConfig
-    from pdftext_spark.operators.extract import plain_text, plain_text_variants
+    from pdftext_spark.operators.extract import (extract, plain_text,
+                                                 plain_text_variants)
     from pdftext_spark.sources.fixture_io import transcripts_path
 
     src = spark.read.parquet(transcripts_path("sf0.001"))
     got = {(r["conv_id"], r["turn_idx"]):
            (r["text"], r["text_sorted"], r["text_keephyphens"])
            for r in plain_text_variants(src).collect()}
-    for pos, kw in ((0, {}), (1, {"sort": True}), (2, {"hyphens": True})):
+    refs = [(0, extract(src, resolve_links=False))] + [
+        (pos, plain_text(src, ExtractConfig(**kw)))
+        for pos, kw in ((0, {}), (1, {"sort": True}), (2, {"hyphens": True}))]
+    for pos, df in refs:
         ref = {(r["conv_id"], r["turn_idx"]): r["text"]
-               for r in plain_text(src, ExtractConfig(**kw)).collect()}
+               for r in df.select("conv_id", "turn_idx", "text").collect()}
         assert set(ref) == set(got)
         for k, v in ref.items():
             assert got[k][pos] == v, (k, pos)

@@ -61,13 +61,14 @@ def test_substr_exact_equals_sa_kernel(spark, tmp_path):
 
 
 def test_route_batch_arrow_equals_list():
-    """The zero-copy Arrow text path of route_batch must be output-
-    identical to the list[str] path on every routing outcome: nulls,
-    empties, invalid JSON, valid-JSON-non-payload, malformed payloads
-    (the per-turn error channel), prose, HTML, and real payloads —
-    across string/large_string/sliced/chunked array layouts."""
+    """route_batch's zero-copy text view must be output-identical across
+    string/large_string/sliced/chunked array layouts on every routing
+    outcome: nulls, empties, invalid JSON, valid-JSON-non-payload,
+    malformed payloads (the per-turn error channel), prose, HTML, and
+    real payloads. Layouts whose bytes live elsewhere (string_view,
+    dictionary) must fail loudly with the type named, not misparse."""
     import numpy as np
-    import pyarrow as pa
+    import pytest
 
     from pdftext_spark.config import ExtractConfig
     from pdftext_spark.core.api import route_batch
@@ -78,7 +79,7 @@ def test_route_batch_arrow_equals_list():
              '"bbox":[1,2,3,4,5,6,7,8],"charrot":[0.0]}',
              '{"kind":"chars","page_bbox":[0,0,100,100],"text":"hi",'
              '"bbox":[1,2,3,4,5,6,7,8]}',
-             # illegal rotation: both paths must emit rotate_boxes'
+             # illegal rotation: every layout must emit rotate_boxes'
              # message from THIS turn's error channel (the deferred-
              # geometry fast path validates at decode time)
              '{"kind":"chars","page_bbox":[0,0,10,10],"rotation":45,'
@@ -94,9 +95,8 @@ def test_route_batch_arrow_equals_list():
              "user", "user", "user", "tool", "tool"]
     tix = list(range(len(texts)))
     cfg = ExtractConfig()
-    ref = route_batch(texts, roles, tix, cfg)
+    ref = route_batch(pa.array(texts, pa.string()), roles, tix, cfg)
     layouts = [
-        pa.array(texts, type=pa.string()),
         pa.array(texts, type=pa.large_string()),
         pa.array([None] + texts, type=pa.string()).slice(1),
         pa.chunked_array([pa.array(texts[:4]), pa.array(texts[4:])]),
@@ -114,6 +114,36 @@ def test_route_batch_arrow_equals_list():
         if ref.seg is not None:
             assert got.seg.chars.gtext == ref.seg.chars.gtext
             assert np.array_equal(got.seg.chars.boxes, ref.seg.chars.boxes)
+    for arr, name in ((pa.array(texts, type=pa.string_view()), "string_view"),
+                      (pa.array(texts).dictionary_encode(), "dictionary")):
+        with pytest.raises(TypeError, match=name):
+            route_batch(arr, roles, tix, cfg)
+
+
+def test_lone_surrogate_turn_costs_one_turn():
+    """A str turn that is not valid UTF-8 (a lone surrogate) must land in
+    its own row's error channel; the other turns of the call — prose,
+    payload and HTML alike — come out exactly as they do without it."""
+    from pdftext_spark.config import ExtractConfig
+    from pdftext_spark.core.api import process_batch
+
+    good = ["good prose",
+            '{"kind":"chars","page_bbox":[0,0,100,100],"text":"hi",'
+            '"bbox":[1,2,3,4,5,6,7,8]}',
+            "<html><body><p>kept</p></body></html>"]
+    roles = ["user", "user", "tool"]
+    cfg = ExtractConfig()
+    ref = process_batch(good, roles, [0, 1, 2], cfg)
+    for bad, role in (("bad \ud800 prose", "user"),
+                      ('{"kind":"chars","page_bbox":[0,0,100,100],'
+                       '"text":"h\udfff","bbox":[1,2,3,4,5,6,7,8]}', "user"),
+                      ("<p>\ud800</p>", "tool")):
+        outs = process_batch(good[:1] + [bad] + good[1:],
+                             roles[:1] + [role] + roles[1:], [0, 9, 1, 2], cfg)
+        assert outs[1].text == ""
+        assert outs[1].error.startswith("UnicodeDecodeError(")
+        assert [(o.text, o.error, o.page) for o in outs[:1] + outs[2:]] == \
+            [(o.text, o.error, o.page) for o in ref]
 
 
 def test_kernel_runs_from_foreign_cwd(tmp_path):

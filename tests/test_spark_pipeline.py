@@ -179,17 +179,3 @@ def test_refs_broadcast_fallback_parity(spark, transcripts):
             assert ra.asDict(recursive=True) == rb.asDict(recursive=True)
     finally:
         ext.unpersist()
-
-
-def test_links_via_prepass_matches_persist(spark, transcripts):
-    """The opt-in storage-constrained refs path (second filtered kernel
-    pass) must produce byte-identical output to the default cached
-    single-pass path."""
-    cfg = ExtractConfig()
-    a = extract(transcripts, cfg, links_via="persist") \
-        .orderBy("conv_id", "turn_idx").collect()
-    b = extract(transcripts, cfg, links_via="prepass") \
-        .orderBy("conv_id", "turn_idx").collect()
-    assert len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert ra.asDict(recursive=True) == rb.asDict(recursive=True)

@@ -1,7 +1,8 @@
 """String-function parity + the precomputed range table vs live unicodedata."""
 
+import importlib.util
+import os
 import sys
-import unicodedata
 
 import pytest
 
@@ -16,18 +17,18 @@ from tests.oracle_naive import hyphens_text, pp_text
 
 
 def test_cc_ranges_match_unicodedata():
-    """The build-time range table must equal this interpreter's
-    unicodedata judgment (regenerate _cc_ranges.py if this ever fails
-    after a Python/unicodedata upgrade)."""
-    in_ranges = set()
-    for a, b in CC_DELETE_RANGES:
-        in_ranges.update(range(a, b + 1))
-    # spot-check densely below 0x2000 and sampled above
-    for cp in list(range(0x2000)) + list(range(0x2000, sys.maxunicode + 1, 257)):
-        ch = chr(cp)
-        expect = (unicodedata.category(ch)[0] == "C"
-                  and ch != HYPHEN_SENTINEL and ch not in KEPT_WHITESPACE)
-        assert (cp in in_ranges) == expect, hex(cp)
+    """The build-time range table must equal what
+    scripts/gen_cc_ranges.py computes from this interpreter's
+    unicodedata over the whole plane (rerun the script if this ever
+    fails after a Python/unicodedata upgrade)."""
+    spec = importlib.util.spec_from_file_location(
+        "gen_cc_ranges",
+        os.path.join(os.path.dirname(__file__), "..", "scripts",
+                     "gen_cc_ranges.py"))
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    assert gen.KEPT == {HYPHEN_SENTINEL} | KEPT_WHITESPACE
+    assert CC_DELETE_RANGES == gen.cc_delete_ranges()
 
 
 @pytest.mark.parametrize("s", [
