@@ -22,12 +22,3 @@ Reference semantics are documented per-operator in SURVEY.md §2 with
 """
 
 __version__ = "0.3.0"
-
-from pdftext_spark.config import ExtractConfig  # noqa: F401
-from pdftext_spark.core.geometry import Bbox  # noqa: F401
-from pdftext_spark.operators.extract import extract, plain_text  # noqa: F401
-from pdftext_spark.queries import (  # noqa: F401
-    QUERIES,
-    unpersist_registered,
-    unpersist_tier,
-)

@@ -103,8 +103,14 @@ def table_output(payloads: list, table_inputs: Optional[list] = None,
     patched = []
     for i, ti in zip(page_range, table_inputs):
         p = payloads[i]
-        obj = maybe_parse_payload_raw(
-            None if p is None else p.encode("utf-8", "surrogatepass")) or {}
+        try:
+            obj = maybe_parse_payload_raw(
+                None if p is None else p.encode("utf-8", "surrogatepass")) or {}
+        except UnicodeEncodeError:
+            # a lone surrogate: pass the page through, and the kernel
+            # makes it this page's error instead of failing the call
+            patched.append(p)
+            continue
         obj["tables"] = ti["tables"]
         obj["img_size"] = ti["img_size"]
         patched.append(json.dumps(obj, ensure_ascii=False))

@@ -89,6 +89,13 @@ def maybe_parse_payload_raw(raw) -> Optional[dict]:
             obj = json.loads(str(raw, "utf-8"))
         except ValueError:
             return None
+        if isinstance(obj, dict) and obj.get("kind") == "chars":
+            # ...and a "\ud800" escape decodes to one as well (orjson
+            # rejects it): a strict re-encode raises UnicodeEncodeError
+            # here, inside the caller's per-turn error channel
+            json.dumps(obj, ensure_ascii=False).encode("utf-8")
+            return obj
+        return None
     if isinstance(obj, dict) and obj.get("kind") == "chars":
         return obj
     return None

@@ -27,7 +27,6 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 import numpy as np
-import pandas as pd
 
 from pdftext_spark.core.geometry import envelope_reduceat, intersection_pct
 from pdftext_spark.core.payload import DecodedTurn, font_tuple
@@ -39,6 +38,13 @@ _WORD_END_CPS = np.array([10, 32, 2], dtype=np.uint32)
 # Codepoints that end a span/line when previous: '\x02', '\n'
 # — pages.py:111-113, pages.py:148-150.
 _SPAN_END_CPS = np.array([2, 10], dtype=np.uint32)
+# Odd 64-bit multipliers of _dup_masks' row hash (a wrapping uint64 dot
+# product).
+_ROW_MIX = np.array([0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F,
+                     0x165667B19E3779F9, 0xD6E8FEB86659FD93,
+                     0xFF51AFD7ED558CCD, 0xC4CEB9FE1A85EC53,
+                     0x94D049BB133111EB, 0xBF58476D1CE4E5B9],
+                    dtype=np.uint64)
 
 
 @dataclass
@@ -136,6 +142,38 @@ def _lag_breaks(cb_turn: np.ndarray, cps: np.ndarray, font: np.ndarray,
     return starts
 
 
+def _dup_masks(rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Duplicate rows of a C-contiguous (n, k<=8) int64 array: (equal to
+    any other row, equal to an EARLIER row). A wrapping multiply-add
+    hash picks the candidate rows; an exact stable lexsort over the
+    candidates alone decides, so a hash collision costs time, never
+    correctness."""
+    n, k = rows.shape
+    dup_any = np.zeros(n, dtype=bool)
+    dup_later = np.zeros(n, dtype=bool)
+    h = rows.view(np.uint64) @ _ROW_MIX[:k]
+    o = np.argsort(h)
+    hs = h[o]
+    eq = hs[1:] == hs[:-1]
+    if not eq.any():
+        return dup_any, dup_later
+    hit = np.zeros(n, dtype=bool)
+    hit[o[1:][eq]] = True
+    hit[o[:-1][eq]] = True
+    cand = np.flatnonzero(hit)
+    c = rows[cand]
+    # stable: equal rows stay in original order, so each group's first
+    # sorted member is its first-seen row
+    order = np.lexsort(c.T[::-1])
+    sc = c[order]
+    same = (sc[1:] == sc[:-1]).all(axis=1)
+    later = cand[order[1:][same]]
+    dup_later[later] = True
+    dup_any[later] = True
+    dup_any[cand[order[:-1][same]]] = True
+    return dup_any, dup_later
+
+
 def word_dedup_mask(cb: CharBatch) -> np.ndarray:
     """W1 + A6: build words, first-seen-dedup them, return the char keep
     mask (chars.py:58-115).
@@ -185,13 +223,11 @@ def word_dedup_mask(cb: CharBatch) -> np.ndarray:
     # dedup; (b) the f-string collision gate below needs exactly this
     # set (rendered-key equality requires equal turn + rb, because both
     # parses of the reference f-string end at its first ']' — the
-    # docstring's squeeze argument). Row dedup runs on the raw 40-byte
-    # row image via a void-dtype view: one opaque-bytes hash per row.
+    # docstring's squeeze argument).
     k5 = np.empty((nw, 5), dtype=np.int64)
     k5[:, 0] = wturn
     k5[:, 1:5] = rb.view(np.int64)
-    r5 = k5.view(np.dtype((np.void, 40))).ravel()
-    rb_dup = pd.Series(r5).duplicated(keep=False).to_numpy()
+    rb_dup = _dup_masks(k5)[0]
     keep_word = np.ones(nw, dtype=bool)
     if rb_dup.any():
         ci = np.flatnonzero(rb_dup)
@@ -203,12 +239,13 @@ def word_dedup_mask(cb: CharBatch) -> np.ndarray:
         ckey[:, :5] = k5[ci]
         ckey[:, 5] = rotw[ci].view(np.int64)
         ckey[:, 6] = cb.font[s_idx[ci]]
-        ckey[:, 7] = pd.factorize(np.asarray(ctexts, dtype=object))[0]
-        crows = ckey.view(np.dtype((np.void, 64))).ravel()
+        # text codes only feed row equality, so any injective code works
+        tcode: dict = {}
+        ckey[:, 7] = [tcode.setdefault(t, len(tcode)) for t in ctexts]
         # full-key duplicates restricted to the candidate subset give
         # the global verdict: any full-key-equal pair is (turn, rb)-
         # equal, so both members are in `ci`, in original order
-        keep_word[ci] = ~pd.Series(crows).duplicated().to_numpy()
+        keep_word[ci] = ~_dup_masks(ckey)[1]
 
     # --- f-string collision gate (see docstring). Field classes that can
     # put a '-' into the rendered key: text chars, rotation repr (sign,

@@ -24,8 +24,8 @@ Spark `conv(substring(md5(s),1,8),16,10)`, DuckDB
 `('0x'||substr(md5(s),1,8))::BIGINT`.
 """
 
-# Since round 5 the operator implementations live in
-# pdftext_spark/registry/ (one module per family; moved verbatim):
+# The operator implementations live in pdftext_spark/registry/, one
+# module per family:
 #   _shared     fixture paths, caches, tokenizer fragments, hash/cosine
 #   extraction  transcripts surfaces + refs graph
 #   dedup       exact/minhash/simhash/jaccard/embedding/components/CDC
@@ -34,387 +34,20 @@ Spark `conv(substring(md5(s),1,8),16,10)`, DuckDB
 #   multimodal  synthetic containers: metadata/frames/phash/neardup
 #   relational  TPC-H demos + events windows/sessions/funnels/joins
 #   pipeline    scrub/substring/sampling/packing/SCD2/merge/quantiles
-# This module remains the single public surface: it re-exports every
-# name (so `from pdftext_spark.queries import X` and Q.<internal> keep
-# working) and owns the gate/registry dicts below.
+# This module owns only the gate/registry dicts below and the cache
+# eviction seams; import an operator's helpers from its family module.
+from pdftext_spark.registry import (
+    ann,
+    dedup,
+    extraction,
+    multimodal,
+    pipeline,
+    relational,
+    textqual,
+)
 from pdftext_spark.registry._shared import (  # noqa: F401
-    DataFrame,
-    ExtractConfig,
-    F,
-    SparkSession,
-    Window,
-    _EXTRACT_CACHE,
-    _H_SQL,
-    _PERSISTED_REGISTRY,
-    _SHINGLES_DUCK,
-    _SHINGLES_SPARK,
-    _STOPWORDS,
-    _TOKS_DUCK,
-    _TOKS_SPARK,
-    _cos6,
-    _docs,
-    _emb,
-    _extracted_df,
-    _fixture_path,
-    _h,
-    _let,
-    _register_persisted,
-    _sw_list,
-    annotations,
-    ensure_expected_outputs,
-    ensure_fixture_dir,
-    extract,
-    os,
-    tier_for_sf_dir,
-    transcripts_path,
     unpersist_registered,
     unpersist_tier,
-)
-from pdftext_spark.registry.extraction import (  # noqa: F401
-    _DENY_DOMAINS,
-    _DOMAIN_RE,
-    _PR_ITERS,
-    _PR_SCALE,
-    _TRACK,
-    _TRACK_RUN,
-    _TRACK_TAIL,
-    _URL_HEAD,
-    _URL_HTTP,
-    _URL_P443,
-    _URL_P80,
-    _flat_spans,
-    _plain_mode_df,
-    canonical_url_col,
-    canonical_url_sql,
-    q_extract_blocks,
-    q_extract_chars,
-    q_extract_html_main,
-    q_extract_page_meta,
-    q_extract_plain,
-    q_extract_plain_hyphens,
-    q_extract_plain_sorted,
-    q_extract_refs,
-    q_extract_span_counts,
-    q_extract_spans,
-    q_extract_table_cells,
-    q_refs_canonical,
-    q_refs_domains,
-    q_refs_pagerank,
-    q_refs_policy,
-    q_turn_filter,
-    sql_extract_blocks,
-    sql_extract_chars,
-    sql_extract_html_main,
-    sql_extract_page_meta,
-    sql_extract_plain,
-    sql_extract_plain_hyphens,
-    sql_extract_plain_sorted,
-    sql_extract_refs,
-    sql_extract_span_counts,
-    sql_extract_spans,
-    sql_extract_table_cells,
-    sql_refs_canonical,
-    sql_refs_domains,
-    sql_refs_pagerank,
-    sql_refs_policy,
-    sql_turn_filter,
-)
-from pdftext_spark.registry.ann import (  # noqa: F401
-    _COS_DUCK,
-    _KM_ITERS,
-    _KM_K,
-    _KM_NPROBE,
-    _NPROBE,
-    _PQ_D,
-    _PQ_ITERS,
-    _PQ_K,
-    _PQ_M,
-    _cosine_pairs,
-    _ivf_search,
-    _km_argmax_expr,
-    _km_cent_scores,
-    _km_cos_duck,
-    _km_cos_sql_spark,
-    _pq_codes_expr,
-    _pq_cos_spark,
-    _pq_recon_expr,
-    _pq_train,
-    _query_pairs,
-    _sql_pq_chain,
-    q_ann_bruteforce,
-    q_ann_bruteforce_l2,
-    q_ann_bruteforce_np,
-    q_ann_ivf,
-    q_ann_ivf_kmeans,
-    q_ann_ivf_probe,
-    q_ann_maxip,
-    q_ann_pq,
-    q_ann_pq_adc,
-    q_emb_quantize,
-    sql_ann_bruteforce,
-    sql_ann_bruteforce_l2,
-    sql_ann_ivf,
-    sql_ann_ivf_kmeans,
-    sql_ann_ivf_probe,
-    sql_ann_maxip,
-    sql_ann_pq,
-    sql_ann_pq_adc,
-    sql_emb_quantize,
-)
-from pdftext_spark.registry.dedup import (  # noqa: F401
-    _BAND,
-    _DOT_DUCK,
-    _HSHINGLES_DUCK,
-    _HSHINGLES_SPARK,
-    _HSHINGLE_CTE,
-    _M31,
-    _NORM_DUCK,
-    _N_PERM,
-    _SHINGLE_CTE,
-    _TOKH_DUCK,
-    _TOKH_SPARK,
-    _mh_coef,
-    _shc,
-    _shingle_df,
-    _srp_band_expr_duck,
-    _srp_band_expr_spark,
-    _srp_signs,
-    min_label_components,
-    minhash_bands,
-    minhash_signature,
-    q_dedup_clusters,
-    q_dedup_clusters_star,
-    q_dedup_embedding,
-    q_dedup_embedding_lsh,
-    q_dedup_exact,
-    q_dedup_jaccard,
-    q_dedup_jaccard_prefix,
-    q_dedup_minhash_lsh,
-    q_dedup_semantic,
-    q_dedup_simhash,
-    sql_dedup_clusters,
-    sql_dedup_embedding,
-    sql_dedup_embedding_lsh,
-    sql_dedup_exact,
-    sql_dedup_jaccard,
-    sql_dedup_minhash_lsh,
-    sql_dedup_semantic,
-    sql_dedup_simhash,
-    star_components,
-)
-from pdftext_spark.registry.textqual import (  # noqa: F401
-    _BLOCKLIST,
-    _BLOOM_BITS,
-    _BLOOM_PROBES,
-    _BM25_QUERIES,
-    _BM25_TOPK,
-    _BM25_VOCAB,
-    _BPE_RE,
-    _BPE_ROUNDS,
-    _CDC_DIV,
-    _CHUNK_TOKENS,
-    _CMS_D,
-    _CMS_W,
-    _HLL_BUCKETS,
-    _HLL_RMAX,
-    _PII_EMAIL,
-    _PII_PHONE,
-    _PMI_MIN_COUNT,
-    _PMI_SCALE,
-    _PMI_TOPK,
-    _POSTINGS_MIN_DF,
-    _PROFILE_COLS,
-    _SPLIT_BOUNDS,
-    _SURPRISAL_SCALE,
-    _WINNOW_W,
-    _bloom_hit_term,
-    _bloom_positions,
-    _cms_slot,
-    _sql_strset,
-    q_dataset_split,
-    q_doc_profile,
-    q_graph_triangles,
-    q_text_blocklist,
-    q_text_bloom,
-    q_text_bm25,
-    q_text_bpe,
-    q_text_bpe_encode,
-    q_text_ccnet,
-    q_text_chunks,
-    q_text_chunks_cdc,
-    q_text_cms,
-    q_text_features,
-    q_text_fingerprint,
-    q_text_hll,
-    q_text_langid,
-    q_text_perplexity,
-    q_text_pii,
-    q_text_pmi,
-    q_text_postings,
-    q_text_quality,
-    q_text_repetition,
-    q_text_surprisal,
-    q_text_tfidf,
-    q_text_tokens,
-    q_text_winnow,
-    sql_dataset_split,
-    sql_doc_profile,
-    sql_graph_triangles,
-    sql_text_blocklist,
-    sql_text_bloom,
-    sql_text_bm25,
-    sql_text_bpe,
-    sql_text_bpe_encode,
-    sql_text_ccnet,
-    sql_text_chunks,
-    sql_text_chunks_cdc,
-    sql_text_cms,
-    sql_text_features,
-    sql_text_fingerprint,
-    sql_text_hll,
-    sql_text_langid,
-    sql_text_perplexity,
-    sql_text_pii,
-    sql_text_pmi,
-    sql_text_postings,
-    sql_text_quality,
-    sql_text_repetition,
-    sql_text_surprisal,
-    sql_text_tfidf,
-    sql_text_tokens,
-    sql_text_winnow,
-)
-from pdftext_spark.registry.multimodal import (  # noqa: F401
-    _MM_HEADER_DUCK,
-    _MM_HEADER_SPARK,
-    _PHASH_BANDS,
-    _PHASH_HAM_MAX,
-    q_mm_frame_sample,
-    q_mm_metadata,
-    q_mm_neardup,
-    q_mm_phash,
-    sql_mm_frame_sample,
-    sql_mm_metadata,
-    sql_mm_neardup,
-    sql_mm_phash,
-)
-from pdftext_spark.registry.relational import (  # noqa: F401
-    _ASOF_CHUNK_US,
-    _EVENT_TYPES,
-    _FUNNEL_STAGES,
-    _PATTERN_SPAN_US,
-    _RANGE_W_US,
-    _SESSION_GAP_US,
-    _SLIDE_K,
-    _SLIDE_US,
-    _WEEK_US,
-    _with_us,
-    q_events_asof,
-    q_events_funnel,
-    q_events_funnel_chunked,
-    q_events_pattern,
-    q_events_pivot,
-    q_events_props,
-    q_events_range_join,
-    q_events_retention,
-    q_events_sessionize,
-    q_events_sessionize_chunked,
-    q_events_unpivot,
-    q_events_value_stats,
-    q_events_window,
-    q_events_window_sliding,
-    q_rel_pricing_summary,
-    q_rel_region_volume,
-    q_rel_rollup,
-    q_rel_ship_priority,
-    q_rel_top_customers,
-    sql_events_asof,
-    sql_events_funnel,
-    sql_events_pattern,
-    sql_events_pivot,
-    sql_events_props,
-    sql_events_range_join,
-    sql_events_retention,
-    sql_events_sessionize,
-    sql_events_unpivot,
-    sql_events_value_stats,
-    sql_events_window,
-    sql_events_window_sliding,
-    sql_rel_pricing_summary,
-    sql_rel_region_volume,
-    sql_rel_rollup,
-    sql_rel_ship_priority,
-    sql_rel_top_customers,
-)
-from pdftext_spark.registry.pipeline import (  # noqa: F401
-    _HIST_B,
-    _MERGE_INS_OFFSET,
-    _MIX_DENOM,
-    _MIX_WEB,
-    _PACK_BUDGET,
-    _PACK_SHARDS,
-    _PASSAGE_N,
-    _QUANTILES,
-    _SKEW_PAR,
-    _SKEW_TOPN,
-    _STRATA_RATES,
-    _Z_BITS,
-    _Z_CUT,
-    _Z_FILE_SHIFT,
-    _Z_MUL_LIMIT,
-    _kgram_duck,
-    _kgram_spark,
-    _mix_thresholds,
-    _pack_frame,
-    _z_expr,
-    q_contamination,
-    q_contamination_lsh,
-    q_curate_corpus,
-    q_dedup_apply,
-    q_dedup_passages,
-    q_dedup_scrub,
-    q_dedup_substr_exact,
-    q_dedup_substr_scrub,
-    q_events_histogram,
-    q_events_outliers,
-    q_events_quantiles,
-    q_events_quantiles_sketch,
-    q_events_scd2,
-    q_events_skew_report,
-    q_layout_zorder,
-    q_pipeline_pack,
-    q_sample_hash,
-    q_sample_mix,
-    q_sample_stratified,
-    q_snapshot_merge,
-    q_source_stats,
-    q_text_pack,
-    q_text_pack_split,
-    q_text_topterms,
-    sql_contamination,
-    sql_contamination_lsh,
-    sql_curate_corpus,
-    sql_dedup_apply,
-    sql_dedup_passages,
-    sql_dedup_scrub,
-    sql_dedup_substr_exact,
-    sql_dedup_substr_scrub,
-    sql_events_histogram,
-    sql_events_outliers,
-    sql_events_quantiles,
-    sql_events_quantiles_sketch,
-    sql_events_scd2,
-    sql_events_skew_report,
-    sql_layout_zorder,
-    sql_pipeline_pack,
-    sql_sample_hash,
-    sql_sample_mix,
-    sql_sample_stratified,
-    sql_snapshot_merge,
-    sql_source_stats,
-    sql_text_pack,
-    sql_text_pack_split,
-    sql_text_topterms,
 )
 
 # --------------------------------------------------------------------------
@@ -435,70 +68,70 @@ DRIVER_GATE_CAP = 50
 
 GATED_QUERIES = {
     # extraction (SURVEY.md §2 operator pipeline, oracle = naive-oracle parquet)
-    "extract_plain": (q_extract_plain, sql_extract_plain),
-    "extract_spans": (q_extract_spans, sql_extract_spans),
-    "extract_chars": (q_extract_chars, sql_extract_chars),
-    "extract_blocks": (q_extract_blocks, sql_extract_blocks),
-    "extract_refs": (q_extract_refs, sql_extract_refs),
-    "extract_page_meta": (q_extract_page_meta, sql_extract_page_meta),
-    "extract_table_cells": (q_extract_table_cells, sql_extract_table_cells),
-    "extract_html_main": (q_extract_html_main, sql_extract_html_main),
-    "extract_span_counts": (q_extract_span_counts, sql_extract_span_counts),
-    "refs_domains": (q_refs_domains, sql_refs_domains),
-    "refs_canonical": (q_refs_canonical, sql_refs_canonical),
-    "turn_filter": (q_turn_filter, sql_turn_filter),
+    "extract_plain": (extraction.q_extract_plain, extraction.sql_extract_plain),
+    "extract_spans": (extraction.q_extract_spans, extraction.sql_extract_spans),
+    "extract_chars": (extraction.q_extract_chars, extraction.sql_extract_chars),
+    "extract_blocks": (extraction.q_extract_blocks, extraction.sql_extract_blocks),
+    "extract_refs": (extraction.q_extract_refs, extraction.sql_extract_refs),
+    "extract_page_meta": (extraction.q_extract_page_meta, extraction.sql_extract_page_meta),
+    "extract_table_cells": (extraction.q_extract_table_cells, extraction.sql_extract_table_cells),
+    "extract_html_main": (extraction.q_extract_html_main, extraction.sql_extract_html_main),
+    "extract_span_counts": (extraction.q_extract_span_counts, extraction.sql_extract_span_counts),
+    "refs_domains": (extraction.q_refs_domains, extraction.sql_refs_domains),
+    "refs_canonical": (extraction.q_refs_canonical, extraction.sql_refs_canonical),
+    "turn_filter": (extraction.q_turn_filter, extraction.sql_turn_filter),
     # text analysis
-    "text_tokens": (q_text_tokens, sql_text_tokens),
-    "text_quality": (q_text_quality, sql_text_quality),
-    "text_langid": (q_text_langid, sql_text_langid),
-    "text_fingerprint": (q_text_fingerprint, sql_text_fingerprint),
-    "text_repetition": (q_text_repetition, sql_text_repetition),
-    "text_chunks": (q_text_chunks, sql_text_chunks),
-    "text_tfidf": (q_text_tfidf, sql_text_tfidf),
-    "text_blocklist": (q_text_blocklist, sql_text_blocklist),
-    "text_perplexity": (q_text_perplexity, sql_text_perplexity),
-    "text_pii": (q_text_pii, sql_text_pii),
+    "text_tokens": (textqual.q_text_tokens, textqual.sql_text_tokens),
+    "text_quality": (textqual.q_text_quality, textqual.sql_text_quality),
+    "text_langid": (textqual.q_text_langid, textqual.sql_text_langid),
+    "text_fingerprint": (textqual.q_text_fingerprint, textqual.sql_text_fingerprint),
+    "text_repetition": (textqual.q_text_repetition, textqual.sql_text_repetition),
+    "text_chunks": (textqual.q_text_chunks, textqual.sql_text_chunks),
+    "text_tfidf": (textqual.q_text_tfidf, textqual.sql_text_tfidf),
+    "text_blocklist": (textqual.q_text_blocklist, textqual.sql_text_blocklist),
+    "text_perplexity": (textqual.q_text_perplexity, textqual.sql_text_perplexity),
+    "text_pii": (textqual.q_text_pii, textqual.sql_text_pii),
     # dedup
-    "dedup_exact": (q_dedup_exact, sql_dedup_exact),
-    "dedup_minhash_lsh": (q_dedup_minhash_lsh, sql_dedup_minhash_lsh),
-    "dedup_simhash": (q_dedup_simhash, sql_dedup_simhash),
-    "dedup_embedding_lsh": (q_dedup_embedding_lsh, sql_dedup_embedding_lsh),
-    "dedup_clusters": (q_dedup_clusters, sql_dedup_clusters),
-    "dedup_apply": (q_dedup_apply, sql_dedup_apply),
-    "dedup_passages": (q_dedup_passages, sql_dedup_passages),
+    "dedup_exact": (dedup.q_dedup_exact, dedup.sql_dedup_exact),
+    "dedup_minhash_lsh": (dedup.q_dedup_minhash_lsh, dedup.sql_dedup_minhash_lsh),
+    "dedup_simhash": (dedup.q_dedup_simhash, dedup.sql_dedup_simhash),
+    "dedup_embedding_lsh": (dedup.q_dedup_embedding_lsh, dedup.sql_dedup_embedding_lsh),
+    "dedup_clusters": (dedup.q_dedup_clusters, dedup.sql_dedup_clusters),
+    "dedup_apply": (pipeline.q_dedup_apply, pipeline.sql_dedup_apply),
+    "dedup_passages": (pipeline.q_dedup_passages, pipeline.sql_dedup_passages),
     # pipeline composition
-    "sample_hash": (q_sample_hash, sql_sample_hash),
-    "source_stats": (q_source_stats, sql_source_stats),
-    "text_pack": (q_text_pack, sql_text_pack),
+    "sample_hash": (pipeline.q_sample_hash, pipeline.sql_sample_hash),
+    "source_stats": (pipeline.q_source_stats, pipeline.sql_source_stats),
+    "text_pack": (pipeline.q_text_pack, pipeline.sql_text_pack),
     # r5 rotation: tfidf-stats composition ceded its row to text_bpe_encode
-    "text_bpe_encode": (q_text_bpe_encode, sql_text_bpe_encode),
-    "contamination": (q_contamination, sql_contamination),
-    "curate_corpus": (q_curate_corpus, sql_curate_corpus),
+    "text_bpe_encode": (textqual.q_text_bpe_encode, textqual.sql_text_bpe_encode),
+    "contamination": (pipeline.q_contamination, pipeline.sql_contamination),
+    "curate_corpus": (pipeline.q_curate_corpus, pipeline.sql_curate_corpus),
     # similarity search
-    "ann_bruteforce": (q_ann_bruteforce, sql_ann_bruteforce),
-    "ann_ivf_probe": (q_ann_ivf_probe, sql_ann_ivf_probe),
+    "ann_bruteforce": (ann.q_ann_bruteforce, ann.sql_ann_bruteforce),
+    "ann_ivf_probe": (ann.q_ann_ivf_probe, ann.sql_ann_ivf_probe),
     # r5 rotation: k-means-refined IVF variant ceded its row to dedup_substr_exact (ann_ivf_probe stays gated)
-    "dedup_substr_exact": (q_dedup_substr_exact, sql_dedup_substr_exact),
-    "emb_quantize": (q_emb_quantize, sql_emb_quantize),
+    "dedup_substr_exact": (pipeline.q_dedup_substr_exact, pipeline.sql_dedup_substr_exact),
+    "emb_quantize": (ann.q_emb_quantize, ann.sql_emb_quantize),
     # multimodal
-    "mm_metadata": (q_mm_metadata, sql_mm_metadata),
+    "mm_metadata": (multimodal.q_mm_metadata, multimodal.sql_mm_metadata),
     # r5 rotation: mm_metadata composition ceded its row to events_quantiles_sketch
-    "events_quantiles_sketch": (q_events_quantiles_sketch, sql_events_quantiles_sketch),
+    "events_quantiles_sketch": (pipeline.q_events_quantiles_sketch, pipeline.sql_events_quantiles_sketch),
     # relational / stream analytics
-    "rel_pricing_summary": (q_rel_pricing_summary, sql_rel_pricing_summary),
-    "rel_top_customers": (q_rel_top_customers, sql_rel_top_customers),
+    "rel_pricing_summary": (relational.q_rel_pricing_summary, relational.sql_rel_pricing_summary),
+    "rel_top_customers": (relational.q_rel_top_customers, relational.sql_rel_top_customers),
     # Round-5 gate rotation (ADVICE r4): rel_region_volume / rel_rollup
     # moved to UNGATED (both are broadcast-join/grouping compositions of
     # the still-gated rel_pricing_summary + rel_top_customers
     # constituents); their two rows now externally verify the
     # novel-semantics SCD2 interval builder and the CDC snapshot MERGE.
-    "events_scd2": (q_events_scd2, sql_events_scd2),
-    "snapshot_merge": (q_snapshot_merge, sql_snapshot_merge),
-    "events_value_stats": (q_events_value_stats, sql_events_value_stats),
-    "events_window": (q_events_window, sql_events_window),
-    "events_sessionize": (q_events_sessionize, sql_events_sessionize),
-    "events_asof": (q_events_asof, sql_events_asof),
-    "events_range_join": (q_events_range_join, sql_events_range_join),
+    "events_scd2": (pipeline.q_events_scd2, pipeline.sql_events_scd2),
+    "snapshot_merge": (pipeline.q_snapshot_merge, pipeline.sql_snapshot_merge),
+    "events_value_stats": (relational.q_events_value_stats, relational.sql_events_value_stats),
+    "events_window": (relational.q_events_window, relational.sql_events_window),
+    "events_sessionize": (relational.q_events_sessionize, relational.sql_events_sessionize),
+    "events_asof": (relational.q_events_asof, relational.sql_events_asof),
+    "events_range_join": (relational.q_events_range_join, relational.sql_events_range_join),
 }
 
 UNGATED_QUERIES = {
@@ -508,65 +141,65 @@ UNGATED_QUERIES = {
     # externally driver-verified again via extract_plain's hash; these
     # standalone forms stay as the ergonomic API surface, verified by
     # the replica + tests/test_spark_pipeline.py
-    "extract_plain_sorted": (q_extract_plain_sorted, sql_extract_plain_sorted),
-    "extract_plain_hyphens": (q_extract_plain_hyphens, sql_extract_plain_hyphens),
-    "refs_policy": (q_refs_policy, sql_refs_policy),            # composition: refs_canonical x blocklist broadcast
-    "sample_stratified": (q_sample_stratified, sql_sample_stratified),  # per-lang rate variant of sample_hash (same md5-mod filter)
-    "sample_mix": (q_sample_mix, sql_sample_mix),  # composition: source_stats' mix counts x sample_hash's md5-mod filter, driver-literal rates (k-means pattern)
-    "dedup_scrub": (q_dedup_scrub, sql_dedup_scrub),  # materialization of dedup_passages (dedup_apply's pattern at passage granularity)
-    "refs_pagerank": (q_refs_pagerank, sql_refs_pagerank),  # composition: refs_domains' domain stream x dedup_clusters' iterative superstep family
-    "text_ccnet": (q_text_ccnet, sql_text_ccnet),  # composition: text_perplexity's score x sample_hash's md5 sample (driver-literal thresholds)
-    "ann_bruteforce_l2": (q_ann_bruteforce_l2, sql_ann_bruteforce_l2),  # L2-metric twin of ann_bruteforce (same plan, distance ascending)
-    "ann_maxip": (q_ann_maxip, sql_ann_maxip),  # MIPS-metric twin of ann_bruteforce (derived candidate magnitudes)
-    "rel_ship_priority": (q_rel_ship_priority, sql_rel_ship_priority),  # composition: rel_top_customers' broadcast+top-k x rel_pricing_summary's exact cents
-    "events_retention": (q_events_retention, sql_events_retention),  # composition: sessionize's user-keyed agg x events_window's integer time buckets
-    "events_pattern": (q_events_pattern, sql_events_pattern),  # composition: sessionize's lag window x funnel's stage predicate (contiguous CEP form)
-    "events_sessionize_chunked": (q_events_sessionize_chunked, sql_events_sessionize),  # segmented scale form, same oracle as events_sessionize
-    "events_window_sliding": (q_events_window_sliding, sql_events_window_sliding),  # overlapping-window twin of events_window (explode over slide offsets)
-    "events_pivot": (q_events_pivot, sql_events_pivot),  # pivot = conditional-agg composition of events_value_stats' grouping
-    "events_props": (q_events_props, sql_events_props),  # JSON schema-on-read composition of events_window's rollup shape
-    "events_unpivot": (q_events_unpivot, sql_events_unpivot),  # melt inverse of events_pivot; oracle = direct group count (identity property)
-    "pipeline_pack": (q_pipeline_pack, sql_pipeline_pack),  # composition: curate_corpus ∘ text_pack (the end-to-end prep plan)
-    "contamination_lsh": (q_contamination_lsh, sql_contamination_lsh),  # composition: minhash-LSH x contamination semantics
-    "text_pack_split": (q_text_pack_split, sql_text_pack_split),   # segment-splitting generalization of text_pack
-    "events_funnel": (q_events_funnel, sql_events_funnel),  # composition: sessionize's ordered collect x value_stats' conditional agg
-    "events_funnel_chunked": (q_events_funnel_chunked, sql_events_funnel),  # segmented scale form, same oracle as events_funnel
-    "ann_bruteforce_np": (q_ann_bruteforce_np, sql_ann_bruteforce),  # same oracle as ann_bruteforce
-    "text_surprisal": (q_text_surprisal, sql_text_surprisal),   # unigram special case of text_perplexity
-    "text_features": (q_text_features, sql_text_features),      # single-scan fusion of gated row-wise ops
-    "ann_ivf": (q_ann_ivf, sql_ann_ivf),              # nprobe=1 special case of ann_ivf_probe
-    "dedup_jaccard": (q_dedup_jaccard, sql_dedup_jaccard),      # exact baseline of dedup_minhash_lsh
-    "dedup_jaccard_prefix": (q_dedup_jaccard_prefix, sql_dedup_jaccard),  # PPJoin prefix-filtered scale form, same oracle as dedup_jaccard
-    "dedup_embedding": (q_dedup_embedding, sql_dedup_embedding),  # all-pairs baseline of dedup_embedding_lsh
-    "dedup_semantic": (q_dedup_semantic, sql_dedup_semantic),  # composition: ann_ivf's cluster assignment x dedup_embedding's cosine verify (SemDeDup)
-    "text_bm25": (q_text_bm25, sql_text_bm25),  # composition: text_tfidf's tf/df stats x ann's window top-k, saturation weights as driver literals
-    "text_topterms": (q_text_topterms, sql_text_topterms),  # gated until the r5 rotation: composition of text_tfidf's stats x partial top-k
-    "ann_ivf_kmeans": (q_ann_ivf_kmeans, sql_ann_ivf_kmeans),  # gated until the r5 rotation: k-means-refined variant of the still-gated ann_ivf_probe
-    "mm_frame_sample": (q_mm_frame_sample, sql_mm_frame_sample),  # gated until the r5 rotation: composition of mm_metadata's header parse x frame stride
-    "text_winnow": (q_text_winnow, sql_text_winnow),  # positional-density variant of text_fingerprint (MOSS winnowing, window-min selection)
-    "text_chunks_cdc": (q_text_chunks_cdc, sql_text_chunks_cdc),  # content-defined boundary variant of text_chunks (LBFS rule, shift-robust)
-    "rel_region_volume": (q_rel_region_volume, sql_rel_region_volume),  # star-join composition of rel_pricing_summary's cents agg x rel_top_customers' broadcast dims (gated until r5's rotation)
-    "rel_rollup": (q_rel_rollup, sql_rel_rollup),  # grouping-sets composition of the same broadcast-dim join (gated until r5's rotation)
-    "layout_zorder": (q_layout_zorder, sql_layout_zorder),  # composition: emb_quantize's integer quantization x events_window's bucket rollup (Z-order layout extents)
-    "dedup_clusters_star": (q_dedup_clusters_star, sql_dedup_clusters),  # large-star/small-star edge-rewriting scale path, same oracle as dedup_clusters
-    "dedup_substr_scrub": (q_dedup_substr_scrub, sql_dedup_substr_scrub),  # the exact intervals APPLIED: globally-first occurrence survives, every other occurrence's tokens scrubbed (dedup_scrub plan shape, exactness instead of md5-trust)
-    "mm_phash": (q_mm_phash, sql_mm_phash),  # composition: mm_metadata's container parse x emb_quantize's exact integer reduce (perceptual aHash)
-    "mm_neardup": (q_mm_neardup, sql_mm_neardup),  # composition: mm_phash x dedup_minhash_lsh's band-join (Hamming LSH, exact-complete at d<=7)
-    "text_hll": (q_text_hll, sql_text_hll),  # HyperLogLog register merge, md5-exact in both engines (mergeable-sketch family)
-    "text_bloom": (q_text_bloom, sql_text_bloom),  # per-source Bloom filter words + static probe membership (scan-pruning primitive)
-    "text_pmi": (q_text_pmi, sql_text_pmi),  # PMI collocations ranked by exact integer ratio (log-free, like text_bm25's weights)
-    "text_postings": (q_text_postings, sql_text_postings),  # inverted-index postings digest (search-infra primitive; df-floored)
-    "events_quantiles": (q_events_quantiles, sql_events_quantiles),  # exact rank-selection quantiles over pre-aggregated value counts
-    "text_cms": (q_text_cms, sql_text_cms),  # count-min sketch, third mergeable sketch (one-sided-error frequency estimates)
-    "graph_triangles": (q_graph_triangles, sql_graph_triangles),  # compact-forward triangle enumeration on the near-dup pair graph
-    "dataset_split": (q_dataset_split, sql_dataset_split),  # deterministic 80/10/10 release split with manifest digests (sample_hash family)
-    "doc_profile": (q_doc_profile, sql_doc_profile),  # ANALYZE-style per-column profile; column-pruned scan branches
-    "events_outliers": (q_events_outliers, sql_events_outliers),  # z-score anomalies via broadcast-back stats (no per-type window shuffle)
-    "ann_pq": (q_ann_pq, sql_ann_pq),  # product-quantization codebooks + codes; ann_ivf_kmeans machinery per subspace (spherical/angular PQ)
-    "text_bpe": (q_text_bpe, sql_text_bpe),  # BPE merge-table training on the weighted distinct-word table; merges apply as symbol-list folds (boundary-safe, r4 ADVICE fix)
-    "ann_pq_adc": (q_ann_pq_adc, sql_ann_pq_adc),  # asymmetric-distance search over PQ codes (8 lookups per candidate, exact int64 rank key)
-    "events_skew_report": (q_events_skew_report, sql_events_skew_report),  # key-skew diagnostics + salt-factor hint (planner utility, partial top-k)
-    "events_histogram": (q_events_histogram, sql_events_histogram),  # equi-depth optimizer histogram by exact rank selection (events_quantiles family)
+    "extract_plain_sorted": (extraction.q_extract_plain_sorted, extraction.sql_extract_plain_sorted),
+    "extract_plain_hyphens": (extraction.q_extract_plain_hyphens, extraction.sql_extract_plain_hyphens),
+    "refs_policy": (extraction.q_refs_policy, extraction.sql_refs_policy),            # composition: refs_canonical x blocklist broadcast
+    "sample_stratified": (pipeline.q_sample_stratified, pipeline.sql_sample_stratified),  # per-lang rate variant of sample_hash (same md5-mod filter)
+    "sample_mix": (pipeline.q_sample_mix, pipeline.sql_sample_mix),  # composition: source_stats' mix counts x sample_hash's md5-mod filter, driver-literal rates (k-means pattern)
+    "dedup_scrub": (pipeline.q_dedup_scrub, pipeline.sql_dedup_scrub),  # materialization of dedup_passages (dedup_apply's pattern at passage granularity)
+    "refs_pagerank": (extraction.q_refs_pagerank, extraction.sql_refs_pagerank),  # composition: refs_domains' domain stream x dedup_clusters' iterative superstep family
+    "text_ccnet": (textqual.q_text_ccnet, textqual.sql_text_ccnet),  # composition: text_perplexity's score x sample_hash's md5 sample (driver-literal thresholds)
+    "ann_bruteforce_l2": (ann.q_ann_bruteforce_l2, ann.sql_ann_bruteforce_l2),  # L2-metric twin of ann_bruteforce (same plan, distance ascending)
+    "ann_maxip": (ann.q_ann_maxip, ann.sql_ann_maxip),  # MIPS-metric twin of ann_bruteforce (derived candidate magnitudes)
+    "rel_ship_priority": (relational.q_rel_ship_priority, relational.sql_rel_ship_priority),  # composition: rel_top_customers' broadcast+top-k x rel_pricing_summary's exact cents
+    "events_retention": (relational.q_events_retention, relational.sql_events_retention),  # composition: sessionize's user-keyed agg x events_window's integer time buckets
+    "events_pattern": (relational.q_events_pattern, relational.sql_events_pattern),  # composition: sessionize's lag window x funnel's stage predicate (contiguous CEP form)
+    "events_sessionize_chunked": (relational.q_events_sessionize_chunked, relational.sql_events_sessionize),  # segmented scale form, same oracle as events_sessionize
+    "events_window_sliding": (relational.q_events_window_sliding, relational.sql_events_window_sliding),  # overlapping-window twin of events_window (explode over slide offsets)
+    "events_pivot": (relational.q_events_pivot, relational.sql_events_pivot),  # pivot = conditional-agg composition of events_value_stats' grouping
+    "events_props": (relational.q_events_props, relational.sql_events_props),  # JSON schema-on-read composition of events_window's rollup shape
+    "events_unpivot": (relational.q_events_unpivot, relational.sql_events_unpivot),  # melt inverse of events_pivot; oracle = direct group count (identity property)
+    "pipeline_pack": (pipeline.q_pipeline_pack, pipeline.sql_pipeline_pack),  # composition: curate_corpus ∘ text_pack (the end-to-end prep plan)
+    "contamination_lsh": (pipeline.q_contamination_lsh, pipeline.sql_contamination_lsh),  # composition: minhash-LSH x contamination semantics
+    "text_pack_split": (pipeline.q_text_pack_split, pipeline.sql_text_pack_split),   # segment-splitting generalization of text_pack
+    "events_funnel": (relational.q_events_funnel, relational.sql_events_funnel),  # composition: sessionize's ordered collect x value_stats' conditional agg
+    "events_funnel_chunked": (relational.q_events_funnel_chunked, relational.sql_events_funnel),  # segmented scale form, same oracle as events_funnel
+    "ann_bruteforce_np": (ann.q_ann_bruteforce_np, ann.sql_ann_bruteforce),  # same oracle as ann_bruteforce
+    "text_surprisal": (textqual.q_text_surprisal, textqual.sql_text_surprisal),   # unigram special case of text_perplexity
+    "text_features": (textqual.q_text_features, textqual.sql_text_features),      # single-scan fusion of gated row-wise ops
+    "ann_ivf": (ann.q_ann_ivf, ann.sql_ann_ivf),              # nprobe=1 special case of ann_ivf_probe
+    "dedup_jaccard": (dedup.q_dedup_jaccard, dedup.sql_dedup_jaccard),      # exact baseline of dedup_minhash_lsh
+    "dedup_jaccard_prefix": (dedup.q_dedup_jaccard_prefix, dedup.sql_dedup_jaccard),  # PPJoin prefix-filtered scale form, same oracle as dedup_jaccard
+    "dedup_embedding": (dedup.q_dedup_embedding, dedup.sql_dedup_embedding),  # all-pairs baseline of dedup_embedding_lsh
+    "dedup_semantic": (dedup.q_dedup_semantic, dedup.sql_dedup_semantic),  # composition: ann_ivf's cluster assignment x dedup_embedding's cosine verify (SemDeDup)
+    "text_bm25": (textqual.q_text_bm25, textqual.sql_text_bm25),  # composition: text_tfidf's tf/df stats x ann's window top-k, saturation weights as driver literals
+    "text_topterms": (pipeline.q_text_topterms, pipeline.sql_text_topterms),  # gated until the r5 rotation: composition of text_tfidf's stats x partial top-k
+    "ann_ivf_kmeans": (ann.q_ann_ivf_kmeans, ann.sql_ann_ivf_kmeans),  # gated until the r5 rotation: k-means-refined variant of the still-gated ann_ivf_probe
+    "mm_frame_sample": (multimodal.q_mm_frame_sample, multimodal.sql_mm_frame_sample),  # gated until the r5 rotation: composition of mm_metadata's header parse x frame stride
+    "text_winnow": (textqual.q_text_winnow, textqual.sql_text_winnow),  # positional-density variant of text_fingerprint (MOSS winnowing, window-min selection)
+    "text_chunks_cdc": (textqual.q_text_chunks_cdc, textqual.sql_text_chunks_cdc),  # content-defined boundary variant of text_chunks (LBFS rule, shift-robust)
+    "rel_region_volume": (relational.q_rel_region_volume, relational.sql_rel_region_volume),  # star-join composition of rel_pricing_summary's cents agg x rel_top_customers' broadcast dims (gated until r5's rotation)
+    "rel_rollup": (relational.q_rel_rollup, relational.sql_rel_rollup),  # grouping-sets composition of the same broadcast-dim join (gated until r5's rotation)
+    "layout_zorder": (pipeline.q_layout_zorder, pipeline.sql_layout_zorder),  # composition: emb_quantize's integer quantization x events_window's bucket rollup (Z-order layout extents)
+    "dedup_clusters_star": (dedup.q_dedup_clusters_star, dedup.sql_dedup_clusters),  # large-star/small-star edge-rewriting scale path, same oracle as dedup_clusters
+    "dedup_substr_scrub": (pipeline.q_dedup_substr_scrub, pipeline.sql_dedup_substr_scrub),  # the exact intervals APPLIED: globally-first occurrence survives, every other occurrence's tokens scrubbed (dedup_scrub plan shape, exactness instead of md5-trust)
+    "mm_phash": (multimodal.q_mm_phash, multimodal.sql_mm_phash),  # composition: mm_metadata's container parse x emb_quantize's exact integer reduce (perceptual aHash)
+    "mm_neardup": (multimodal.q_mm_neardup, multimodal.sql_mm_neardup),  # composition: mm_phash x dedup_minhash_lsh's band-join (Hamming LSH, exact-complete at d<=7)
+    "text_hll": (textqual.q_text_hll, textqual.sql_text_hll),  # HyperLogLog register merge, md5-exact in both engines (mergeable-sketch family)
+    "text_bloom": (textqual.q_text_bloom, textqual.sql_text_bloom),  # per-source Bloom filter words + static probe membership (scan-pruning primitive)
+    "text_pmi": (textqual.q_text_pmi, textqual.sql_text_pmi),  # PMI collocations ranked by exact integer ratio (log-free, like text_bm25's weights)
+    "text_postings": (textqual.q_text_postings, textqual.sql_text_postings),  # inverted-index postings digest (search-infra primitive; df-floored)
+    "events_quantiles": (pipeline.q_events_quantiles, pipeline.sql_events_quantiles),  # exact rank-selection quantiles over pre-aggregated value counts
+    "text_cms": (textqual.q_text_cms, textqual.sql_text_cms),  # count-min sketch, third mergeable sketch (one-sided-error frequency estimates)
+    "graph_triangles": (textqual.q_graph_triangles, textqual.sql_graph_triangles),  # compact-forward triangle enumeration on the near-dup pair graph
+    "dataset_split": (textqual.q_dataset_split, textqual.sql_dataset_split),  # deterministic 80/10/10 release split with manifest digests (sample_hash family)
+    "doc_profile": (textqual.q_doc_profile, textqual.sql_doc_profile),  # ANALYZE-style per-column profile; column-pruned scan branches
+    "events_outliers": (pipeline.q_events_outliers, pipeline.sql_events_outliers),  # z-score anomalies via broadcast-back stats (no per-type window shuffle)
+    "ann_pq": (ann.q_ann_pq, ann.sql_ann_pq),  # product-quantization codebooks + codes; ann_ivf_kmeans machinery per subspace (spherical/angular PQ)
+    "text_bpe": (textqual.q_text_bpe, textqual.sql_text_bpe),  # BPE merge-table training on the weighted distinct-word table; merges apply as symbol-list folds (boundary-safe, r4 ADVICE fix)
+    "ann_pq_adc": (ann.q_ann_pq_adc, ann.sql_ann_pq_adc),  # asymmetric-distance search over PQ codes (8 lookups per candidate, exact int64 rank key)
+    "events_skew_report": (pipeline.q_events_skew_report, pipeline.sql_events_skew_report),  # key-skew diagnostics + salt-factor hint (planner utility, partial top-k)
+    "events_histogram": (pipeline.q_events_histogram, pipeline.sql_events_histogram),  # equi-depth optimizer histogram by exact rank selection (events_quantiles family)
 }
 
 assert len(GATED_QUERIES) <= DRIVER_GATE_CAP, (

@@ -1,1 +1,2 @@
-"""Query-family modules behind the pdftext_spark.queries facade."""
+"""Operator implementations, one module per query family; the registry
+dicts that name them live in pdftext_spark.queries."""

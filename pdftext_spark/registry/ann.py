@@ -1,7 +1,5 @@
 """Similarity-search family: brute-force cosine/L2/MIPS top-k,
 IVF (+multi-probe, +k-means), PQ codebooks + ADC, quantization."""
-# GENERATED-BY-SPLIT (round 5): body moved verbatim from queries.py; see
-# pdftext_spark/queries.py for the registry and module map.
 from __future__ import annotations
 
 from pdftext_spark.registry._shared import (  # noqa: F401

@@ -1,8 +1,6 @@
 """Deduplication family: exact, MinHash-LSH, SimHash, Jaccard
 (+PPJoin prefix), embedding cosine (+SRP-LSH), SemDeDup, connected
 components (+large/small-star), CDC chunking, winnowing."""
-# GENERATED-BY-SPLIT (round 5): body moved verbatim from queries.py; see
-# pdftext_spark/queries.py for the registry and module map.
 from __future__ import annotations
 
 from pdftext_spark.registry._shared import (  # noqa: F401

@@ -1,7 +1,5 @@
 """Extraction query family (SURVEY §2 S/P/J/A/W/O/F surfaces
 over the transcripts table) + link/refs graph analytics."""
-# GENERATED-BY-SPLIT (round 5): body moved verbatim from queries.py; see
-# pdftext_spark/queries.py for the registry and module map.
 from __future__ import annotations
 
 from pdftext_spark.registry._shared import (  # noqa: F401

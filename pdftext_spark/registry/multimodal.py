@@ -1,8 +1,6 @@
 """Multimodal family: synthetic binary containers over the
 documents table — metadata parse, frame sampling, perceptual hash,
 Hamming-LSH near-dup."""
-# GENERATED-BY-SPLIT (round 5): body moved verbatim from queries.py; see
-# pdftext_spark/queries.py for the registry and module map.
 from __future__ import annotations
 
 from pdftext_spark.registry._shared import (  # noqa: F401

@@ -1,8 +1,6 @@
 """Pipeline-composition family: dedup materialization/scrub,
 exact substring dedup, sampling/mixing/packing, contamination, SCD2,
 CDC snapshot merge, quantiles/histograms/outliers/skew, Z-order."""
-# GENERATED-BY-SPLIT (round 5): body moved verbatim from queries.py; see
-# pdftext_spark/queries.py for the registry and module map.
 from __future__ import annotations
 
 from pdftext_spark.registry._shared import (  # noqa: F401

@@ -1,8 +1,6 @@
 """Relational/events family: TPC-H-ish demos, windows,
 sessionization, funnels, as-of/range joins, CEP patterns, retention,
 pivot/unpivot, value stats."""
-# GENERATED-BY-SPLIT (round 5): body moved verbatim from queries.py; see
-# pdftext_spark/queries.py for the registry and module map.
 from __future__ import annotations
 
 from pdftext_spark.registry._shared import (  # noqa: F401

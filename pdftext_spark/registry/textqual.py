@@ -1,8 +1,6 @@
 """Text-analysis family: tokens/quality/langid/fingerprints,
 TF-IDF/BM25/perplexity/CCNet, sketches (HLL/Bloom/CMS), BPE, PMI,
 postings, graph triangles, dataset split, doc profiles."""
-# GENERATED-BY-SPLIT (round 5): body moved verbatim from queries.py; see
-# pdftext_spark/queries.py for the registry and module map.
 from __future__ import annotations
 
 from pdftext_spark.registry._shared import (  # noqa: F401

@@ -1,9 +1,11 @@
 """SparkSession builder with the engine's tuned defaults.
 
 Sandbox runs local[N]; on a real cluster the same confs apply (AQE,
-Arrow). Iceberg: this container has no Iceberg runtime jar, so tables
-round-trip through partitioned parquet; `load_transcripts`/`write_output`
-are the single seam where `format("iceberg")` would be swapped in.
+Arrow) except the two that only make sense in local mode: the small
+scan-split default and the workers' PYTHONPATH. Iceberg: this container
+has no Iceberg runtime jar, so tables round-trip through partitioned
+parquet; `load_transcripts`/`write_output` are the single seam where
+`format("iceberg")` would be swapped in.
 """
 
 from __future__ import annotations
@@ -18,29 +20,19 @@ def build_session(app: str = "pdftext_spark", master: str | None = None,
                   shuffle_partitions: int | None = None,
                   max_partition_bytes: str | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    # The kernel closures import pdftext_spark inside the Python workers;
-    # when the driver is launched from another cwd the workers would
-    # otherwise have no way to resolve the package (ModuleNotFoundError
-    # in every task). Ship the package root on the workers' PYTHONPATH —
-    # the local-mode equivalent of --py-files for a checkout.
-    repo_root = os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
-    worker_pp = os.environ.get("PYTHONPATH", "")
-    if repo_root not in worker_pp.split(os.pathsep):
-        worker_pp = (repo_root + os.pathsep + worker_pp) if worker_pp \
-            else repo_root
     master = master or f"local[{cpus}]"
+    local = master.startswith("local")
     shuffle = shuffle_partitions or max(cpus * 2, 8)
     # sandbox inputs are tens of MB, so the 128 MB default collapses the
     # scan into one task; on a real cluster with TB inputs leave the default
-    mpb = max_partition_bytes or os.environ.get(
-        "PDFTEXT_SPARK_MAX_PARTITION_BYTES", "4m")
-    return (
+    mpb = (max_partition_bytes
+           or os.environ.get("PDFTEXT_SPARK_MAX_PARTITION_BYTES")
+           or ("4m" if local else None))
+    builder = (
         SparkSession.builder
         .appName(app)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.files.maxPartitionBytes", mpb)
         .config("spark.sql.files.openCostInBytes", "262144")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -60,11 +52,27 @@ def build_session(app: str = "pdftext_spark", master: str | None = None,
         # cost is each worker's RSS staying at its peak working set.
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "536870912")
-        .config("spark.executorEnv.PYTHONPATH", worker_pp)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("PDFTEXT_SPARK_DRIVER_MEM", "8g"))
-        .getOrCreate()
     )
+    if mpb:
+        builder = builder.config("spark.sql.files.maxPartitionBytes", mpb)
+    if local:
+        # The kernel closures import pdftext_spark inside the Python
+        # workers; when the driver is launched from another cwd the
+        # workers would otherwise have no way to resolve the package
+        # (ModuleNotFoundError in every task). Ship the package root on
+        # the workers' PYTHONPATH — the local-mode equivalent of
+        # --py-files for a checkout; a cluster's executors do not share
+        # the driver's paths, so there --py-files is the route.
+        repo_root = os.path.dirname(os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))))
+        worker_pp = os.environ.get("PYTHONPATH", "")
+        if repo_root not in worker_pp.split(os.pathsep):
+            worker_pp = (repo_root + os.pathsep + worker_pp) if worker_pp \
+                else repo_root
+        builder = builder.config("spark.executorEnv.PYTHONPATH", worker_pp)
+    return builder.getOrCreate()
 
 
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "

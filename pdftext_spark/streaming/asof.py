@@ -1,10 +1,10 @@
 """Streaming as-of enrichment: last-touch attribution at ingest time.
 
-The batch form (queries.q_events_asof) window-scans the finished events
-table: each purchase joins the same user's latest non-purchase event
-strictly earlier in (ts, event_id) order. An online pipeline wants that
-decision as events ARRIVE — emit the attributed purchase in the
-micro-batch it lands in, without re-scanning history.
+The batch form (registry.relational.q_events_asof) window-scans the
+finished events table: each purchase joins the same user's latest
+non-purchase event strictly earlier in (ts, event_id) order. An online
+pipeline wants that decision as events ARRIVE — emit the attributed
+purchase in the micro-batch it lands in, without re-scanning history.
 
 ``asof_stream`` is that operator as a custom stateful stage
 (``applyInPandasWithState`` keyed by user_id):

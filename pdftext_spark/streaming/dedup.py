@@ -1,6 +1,6 @@
 """Streaming exact dedup: first-seen pass-through at ingest time.
 
-The batch form (queries.q_dedup_exact) groups the finished corpus by
+The batch form (registry.dedup.q_dedup_exact) groups the finished corpus by
 content hash and keeps min(doc_id). A training-data INGEST pipeline wants
 the same decision online: admit a document the first time its content is
 seen, drop every later copy — without re-scanning the corpus per batch.

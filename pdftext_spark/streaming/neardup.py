@@ -1,5 +1,6 @@
 """Streaming NEAR-dup dedup at ingest — the online twin of
-queries.q_dedup_minhash_lsh (as streaming/dedup.py is to q_dedup_exact).
+registry.dedup.q_dedup_minhash_lsh (as streaming/dedup.py is to
+q_dedup_exact).
 
 Semantics, exactly the batch twin's candidate+verify rule made
 directional: a document D is dropped iff some EARLIER document E
@@ -49,7 +50,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdftext_spark.queries import minhash_bands, minhash_signature
+from pdftext_spark.registry.dedup import minhash_bands, minhash_signature
 
 NEARDUP_JACCARD = 0.7  # same threshold as q_dedup_minhash_lsh
 

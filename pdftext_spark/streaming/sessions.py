@@ -1,8 +1,8 @@
 """Streaming event analytics: stateful sessionization + windowed counts.
 
 The batch form of gap-based sessionization lives in
-queries.q_events_sessionize (lag + running-sum windows). These are its
-Structured Streaming twins over the same events table
+registry.relational.q_events_sessionize (lag + running-sum windows).
+These are its Structured Streaming twins over the same events table
 (event_id, ts, user_id, event_type, value, props):
 
 - ``sessionize_stream``: custom stateful operator via

@@ -94,7 +94,7 @@ def test_cli_smoke(fixture_rows, tmp_path):
 def test_bbox_public_api():
     """Bbox object view matches the vectorized kernels and the reference
     semantics (schema.py:7-126)."""
-    from pdftext_spark import Bbox
+    from pdftext_spark.core.geometry import Bbox
 
     b = Bbox([10, 20, 30, 60])
     assert (b.width, b.height, b.area) == (20, 40, 800)
@@ -156,3 +156,16 @@ def test_run_rejects_out_of_range_pages():
     with pytest.raises(IndexError):
         paginated_plain_text_output(payloads, page_range=[2])
     assert paginated_plain_text_output(payloads, page_range=[1]) == ["world"]
+
+
+def test_table_output_surrogate_page_costs_one_page():
+    """With explicit table inputs, a payload that spells a lone surrogate
+    as a JSON escape yields no cells for its own page; the other page
+    keeps its cells and the call does not raise."""
+    good = ('{"kind":"chars","page_bbox":[0,0,100,100],"text":"hi",'
+            '"bbox":[1,2,3,4,5,6,7,8]}')
+    bad = good.replace('"hi"', '"h\\ud800"')
+    regions = [{"tables": [[0, 0, 50, 50]], "img_size": [100, 100]}] * 2
+    ref = table_output([good], regions[:1])
+    assert ref[0] and ref[0][0]
+    assert table_output([good, bad], regions) == [ref[0], []]

@@ -318,7 +318,7 @@ def test_mix_thresholds_properties(cw, cc):
     an empty group rates 0, and the realized volume ratio honors the
     3:7 target direction (the web threshold satisfies
     tw*cw*7 <= tc*cc*3 + slack of one rounding unit scaled)."""
-    from pdftext_spark.queries import _MIX_DENOM, _mix_thresholds
+    from pdftext_spark.registry.pipeline import _MIX_DENOM, _mix_thresholds
 
     tw, tc = _mix_thresholds(cw, cc)
     D = _MIX_DENOM

@@ -17,7 +17,7 @@ def test_min_label_components_long_path(spark):
     """A 300-node path graph has eccentricity 299: one-hop-only min-label
     propagation could NOT converge in 64 rounds. Pointer doubling must
     (log2(300) ~ 9 doubling supersteps)."""
-    from pdftext_spark.queries import min_label_components
+    from pdftext_spark.registry.dedup import min_label_components
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(299)], "doc_a int, doc_b int")
@@ -30,7 +30,7 @@ def test_min_label_components_long_path(spark):
 def test_min_label_components_raises_on_non_convergence(spark):
     """Refuse to return wrong clusters: too few rounds must raise, not
     silently return partially propagated labels."""
-    from pdftext_spark.queries import min_label_components
+    from pdftext_spark.registry.dedup import min_label_components
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc_a int, doc_b int")
@@ -39,7 +39,7 @@ def test_min_label_components_raises_on_non_convergence(spark):
 
 
 def test_min_label_components_multiple_components(spark):
-    from pdftext_spark.queries import min_label_components
+    from pdftext_spark.registry.dedup import min_label_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 20)],
@@ -51,7 +51,7 @@ def test_min_label_components_multiple_components(spark):
 
 def _bruteforce_top3(spark, sf_dir):
     """Exact rounded-cosine top-3 for the IVF query set (8 <= vec_id < 24)."""
-    from pdftext_spark.queries import _cosine_pairs
+    from pdftext_spark.registry.ann import _cosine_pairs
 
     pairs = _cosine_pairs(
         spark, sf_dir, (F.col("vec_id") >= 8) & (F.col("vec_id") < 24))
@@ -64,7 +64,7 @@ def _bruteforce_top3(spark, sf_dir):
 def test_ann_ivf_probe_recall_beats_single_probe(spark):
     """nprobe=2 must strictly dominate nprobe=1 in candidate coverage, and
     on this corpus it must recover measurably more of the exact top-3."""
-    from pdftext_spark.queries import q_ann_ivf, q_ann_ivf_probe
+    from pdftext_spark.registry.ann import q_ann_ivf, q_ann_ivf_probe
 
     truth = _bruteforce_top3(spark, SF_DOCS)
     got1 = {(r["qid"], r["neighbor_id"])
@@ -92,7 +92,7 @@ def test_ann_ivf_kmeans_refines_and_matches_recall_floor(spark):
     cannot beat nprobe=2 on raw seeds: 0.479 both. The operator's value
     is the exact-int64 refinement machinery; clustered real embeddings
     are where the refined centroids pay.)"""
-    from pdftext_spark.queries import q_ann_ivf, q_ann_ivf_kmeans
+    from pdftext_spark.registry.ann import q_ann_ivf, q_ann_ivf_kmeans
 
     truth = _bruteforce_top3(spark, SF_DOCS)
     got_seed = {(r["qid"], r["neighbor_id"])
@@ -115,24 +115,26 @@ def test_unpersist_tier_releases_extract_cache(spark):
     """Two-tier service pattern: after unpersist_tier the kernel cache's
     persisted RDDs are gone and the registry entry is evicted (VERDICT r2
     'what's wrong' #2)."""
-    from pdftext_spark import queries as Q
+    from pdftext_spark.queries import unpersist_registered, unpersist_tier
+    from pdftext_spark.registry._shared import _EXTRACT_CACHE
+    from pdftext_spark.registry.extraction import q_extract_spans
 
     # normalize: earlier test modules may have populated the caches
-    Q.unpersist_tier(spark, None)
-    Q.unpersist_registered()
+    unpersist_tier(spark, None)
+    unpersist_registered()
     base = _n_persistent_rdds(spark)
     # q_extract_spans rides the shared _extracted_df kernel cache
     # (q_extract_plain runs its own variants pass since round 5)
-    Q.q_extract_spans(spark, SF).count()
+    q_extract_spans(spark, SF).count()
     assert _n_persistent_rdds(spark) > base
-    key_count = len(Q._EXTRACT_CACHE)
-    released = Q.unpersist_tier(spark, SF)
+    key_count = len(_EXTRACT_CACHE)
+    released = unpersist_tier(spark, SF)
     assert released >= 1
-    assert len(Q._EXTRACT_CACHE) == key_count - 1
+    assert len(_EXTRACT_CACHE) == key_count - 1
     assert _n_persistent_rdds(spark) == base
     # the query still works after eviction (re-extracts, fresh cache entry)
-    assert Q.q_extract_spans(spark, SF).count() > 0
-    Q.unpersist_tier(spark, None)
+    assert q_extract_spans(spark, SF).count() > 0
+    unpersist_tier(spark, None)
     assert _n_persistent_rdds(spark) == base
 
 
@@ -163,15 +165,16 @@ def test_sessionize_rejects_sub_watermark_gap(spark):
 
 
 def test_unpersist_registered_releases_query_side_tables(spark):
-    from pdftext_spark import queries as Q
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.dedup import q_dedup_minhash_lsh
 
     # blocking: a lazy unpersist (here or in an earlier test in this
     # module) can otherwise still be in-flight when the count is read
-    Q.unpersist_registered(blocking=True)
+    unpersist_registered(blocking=True)
     base = _n_persistent_rdds(spark)
-    Q.q_dedup_minhash_lsh(spark, SF_DOCS).count()
+    q_dedup_minhash_lsh(spark, SF_DOCS).count()
     assert _n_persistent_rdds(spark) > base
-    assert Q.unpersist_registered(blocking=True) >= 1
+    assert unpersist_registered(blocking=True) >= 1
     # <= not ==: an EARLIER module's non-blocking unpersist can complete
     # between the base read and here, dropping the count below base
     assert _n_persistent_rdds(spark) <= base
@@ -309,14 +312,15 @@ def test_word_dedup_fstring_collision_quirk():
 def test_blocklist_hash_changes_iff_hits(spark):
     """Docs with zero blocklist hits keep their original token-stream
     hash; docs with hits must NOT (the scrub really rewrote them)."""
-    from pdftext_spark import queries as Q
+    from pdftext_spark.registry._shared import _docs, _TOKS_SPARK
+    from pdftext_spark.registry.textqual import q_text_blocklist
 
     out = {r["doc_id"]: r for r in
-           Q.q_text_blocklist(spark, SF_DOCS).collect()}
+           q_text_blocklist(spark, SF_DOCS).collect()}
     orig = {r["doc_id"]: r["h"] for r in
-            Q._docs(spark, SF_DOCS)
+            _docs(spark, SF_DOCS)
             .select("doc_id", F.md5(F.concat_ws(
-                " ", F.expr(Q._TOKS_SPARK))).alias("h")).collect()}
+                " ", F.expr(_TOKS_SPARK))).alias("h")).collect()}
     assert len(out) == len(orig) > 0
     n_hit = sum(1 for r in out.values() if r["n_hits"] > 0)
     assert 0 < n_hit < len(out)  # blocklist terms occur, but not everywhere
@@ -330,9 +334,9 @@ def test_blocklist_hash_changes_iff_hits(spark):
 def test_emb_quantize_error_bounds(spark):
     """int8 symmetric quantization invariants: max reconstruction error
     is at most scale/2 (nearest-code rounding) and mse <= max_err^2."""
-    from pdftext_spark import queries as Q
+    from pdftext_spark.registry.ann import q_emb_quantize
 
-    rows = Q.q_emb_quantize(spark, SF_DOCS).collect()
+    rows = q_emb_quantize(spark, SF_DOCS).collect()
     assert len(rows) > 0
     for r in rows:
         assert r["n_dims"] == 64
@@ -344,17 +348,19 @@ def test_dedup_passages_covers_exact_dup_docs(spark):
     """Every exactly-duplicated document (>= 8 tokens) contributes all its
     windows as repeated passages, so the passage table must be non-empty
     and every reported passage must occur at least n_docs times."""
-    from pdftext_spark import queries as Q
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.dedup import q_dedup_minhash_lsh
+    from pdftext_spark.registry.pipeline import q_dedup_passages
 
-    rows = Q.q_dedup_passages(spark, SF_DOCS).collect()
+    rows = q_dedup_passages(spark, SF_DOCS).collect()
     assert len(rows) > 0
     assert all(r["n_occurrences"] >= r["n_docs"] >= 2 for r in rows)
     # cross-check: this corpus has near-dup pairs (jaccard >= 0.7 via
     # LSH), and near-dup docs of >= 8 tokens necessarily share 8-token
     # windows — the passage table is their union, so it must be at least
     # as populated as one pair's window overlap
-    near = Q.q_dedup_minhash_lsh(spark, SF_DOCS).count()
-    Q.unpersist_registered()
+    near = q_dedup_minhash_lsh(spark, SF_DOCS).count()
+    unpersist_registered()
     assert near > 0
 
 
@@ -363,9 +369,9 @@ def test_text_pack_bin_budget_invariant(spark):
     bin's prior content has reached the budget — so every bin's content
     BEFORE its last doc is under budget, and bin indices are contiguous
     per source."""
-    from pdftext_spark import queries as Q
+    from pdftext_spark.registry.pipeline import q_text_pack
 
-    rows = Q.q_text_pack(spark, SF_DOCS).collect()
+    rows = q_text_pack(spark, SF_DOCS).collect()
     by_src: dict = {}
     for r in rows:
         by_src.setdefault(r["source"], []).append(r)
@@ -387,16 +393,18 @@ def test_sample_stratified_respects_rates(spark):
     """Per-language realized rates track the configured targets (exact
     determinism is the gate's job; this asserts the stratification is
     real: en is downsampled hardest, zh kept whole)."""
-    from pdftext_spark import queries as Q
+    from pdftext_spark.registry._shared import _docs
+    from pdftext_spark.registry.pipeline import (
+        _STRATA_RATES, q_sample_stratified)
 
-    docs = Q._docs(spark, SF_DOCS)
+    docs = _docs(spark, SF_DOCS)
     totals = {r["lang"]: r["count"]
               for r in docs.groupBy("lang").count().collect()}
     picked = {r["lang"]: r["count"]
-              for r in Q.q_sample_stratified(spark, SF_DOCS)
+              for r in q_sample_stratified(spark, SF_DOCS)
               .groupBy("lang").count().collect()}
     assert picked["zh"] == totals["zh"]  # rate 100: every doc kept
-    for lang, rate in Q._STRATA_RATES.items():
+    for lang, rate in _STRATA_RATES.items():
         frac = picked.get(lang, 0) / totals[lang]
         assert abs(frac - rate / 100) < 0.2  # uniform-hash tolerance
     assert picked["en"] / totals["en"] < picked["de"] / totals["de"]
@@ -405,14 +413,15 @@ def test_sample_stratified_respects_rates(spark):
 def test_refs_domains_counts_match_flat_spans(spark):
     """Domain histogram totals must equal a direct count over the span
     urls (same extraction pass, independent aggregation route)."""
-    from pdftext_spark import queries as Q
+    from pdftext_spark.registry.extraction import (
+        _DOMAIN_RE, _flat_spans, q_refs_domains)
 
     agg = {r["domain"]: r["n_links"]
-           for r in Q.q_refs_domains(spark, SF).collect()}
-    direct = (Q._flat_spans(spark, SF)
+           for r in q_refs_domains(spark, SF).collect()}
+    direct = (_flat_spans(spark, SF)
               .where(F.col("s.url").startswith("http"))
               .select(F.regexp_extract(F.col("s.url"),
-                                       Q._DOMAIN_RE, 1).alias("d"))
+                                       _DOMAIN_RE, 1).alias("d"))
               .groupBy("d").count().collect())
     assert agg == {r["d"]: r["count"] for r in direct}
     assert sum(agg.values()) > 0

@@ -72,7 +72,8 @@ def test_cross_run_ingest_then_near_dup_apply(spark, tmp_path):
     corpus."""
     import os
 
-    from pdftext_spark.queries import q_dedup_clusters, unpersist_registered
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.dedup import q_dedup_clusters
     from pdftext_spark.streaming.dedup import dedup_stream
 
     sf = "/root/testdata/sf0.001"
@@ -175,7 +176,7 @@ def test_expected_outputs_read_materialized_corpus(monkeypatch):
 def test_canonical_url_collapse(spark):
     """Every messy surface form of one target must collapse to the same
     canonical url; distinct targets must stay distinct."""
-    from pdftext_spark.queries import canonical_url_col
+    from pdftext_spark.registry.extraction import canonical_url_col
     forms = [
         "https://example.com/7",
         "HTTPS://Example.COM/7/",
@@ -217,7 +218,7 @@ def test_canonical_url_collapse(spark):
     # cross-engine: DuckDB twin must produce byte-identical results on
     # the same adversarial forms (middle runs aren't in the fixtures)
     import duckdb
-    from pdftext_spark.queries import canonical_url_sql
+    from pdftext_spark.registry.extraction import canonical_url_sql
     con = duckdb.connect()
     con.execute("CREATE TABLE u(url VARCHAR)")
     con.executemany("INSERT INTO u VALUES (?)", [(u,) for u in forms])
@@ -235,7 +236,8 @@ def test_canonical_url_cross_engine_fuzz(spark):
 
     import duckdb
 
-    from pdftext_spark.queries import canonical_url_col, canonical_url_sql
+    from pdftext_spark.registry.extraction import (
+        canonical_url_col, canonical_url_sql)
     rng = random.Random(404)
     schemes = ["http", "https", "HTTP", "Https"]
     hosts = ["example.com", "Example.COM", "sub.EX-ample.org", "x.io"]
@@ -271,13 +273,11 @@ def test_curate_corpus_perplexity_gate(spark):
     gate must actually drop something at a median cap."""
     import duckdb
 
-    from pdftext_spark.queries import (
-        q_curate_corpus,
-        q_text_perplexity,
-        sql_curate_corpus,
-        sql_text_perplexity,
-        unpersist_registered,
-    )
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.pipeline import (
+        q_curate_corpus, sql_curate_corpus)
+    from pdftext_spark.registry.textqual import (
+        q_text_perplexity, sql_text_perplexity)
     sf = "/root/testdata/sf0.001"
     scores = q_text_perplexity(spark, sf).collect()
     vals = sorted(r.perplexity_x1e6 for r in scores)
@@ -393,7 +393,8 @@ def test_perplexity_shuffle_join_form_matches_broadcast(spark):
     """The 100 TB form (shuffle join on the count tables, for when the
     bigram vocabulary outgrows any broadcast) must be value-identical to
     the broadcast form."""
-    from pdftext_spark.queries import q_text_perplexity, unpersist_registered
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.textqual import q_text_perplexity
     sf = "/root/testdata/sf0.001"
     a = sorted(map(tuple, q_text_perplexity(spark, sf).collect()))
     b = sorted(map(tuple, q_text_perplexity(spark, sf, broadcast=False)
@@ -443,7 +444,7 @@ def test_text_pack_split_segments(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pdftext_spark.queries import _PACK_BUDGET, q_text_pack_split
+    from pdftext_spark.registry.pipeline import _PACK_BUDGET, q_text_pack_split
 
     rows = [{"doc_id": i, "text": " ".join(f"w{j}" for j in range(n)),
              "lang": "en", "source": f"s{i % 2}", "n_chars": 0}
@@ -490,7 +491,7 @@ def test_events_funnel_stage_semantics(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pdftext_spark.queries import q_events_funnel
+    from pdftext_spark.registry.relational import q_events_funnel
 
     t0 = dt.datetime(2024, 1, 1)
 
@@ -543,7 +544,7 @@ def test_events_asof_semantics(spark, tmp_path):
     a purchase with no prior touch keeps NULL touch columns."""
     import datetime as dt
 
-    from pdftext_spark.queries import q_events_asof
+    from pdftext_spark.registry.relational import q_events_asof
 
     t0 = dt.datetime(2024, 1, 1)
 
@@ -584,7 +585,7 @@ def test_events_range_join_boundaries(spark, tmp_path):
     the bucket explode must not duplicate pairs)."""
     import datetime as dt
 
-    from pdftext_spark.queries import q_events_range_join
+    from pdftext_spark.registry.relational import q_events_range_join
 
     t0 = dt.datetime(2024, 1, 1)
 
@@ -617,7 +618,7 @@ def test_sample_mix_hits_target_and_never_upsamples(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pdftext_spark.queries import q_sample_mix
+    from pdftext_spark.registry.pipeline import q_sample_mix
 
     rows = []
     for i in range(1800):  # web: src0..src9, 100 chars each
@@ -665,7 +666,7 @@ def test_dedup_scrub_semantics(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pdftext_spark.queries import q_dedup_scrub
+    from pdftext_spark.registry.pipeline import q_dedup_scrub
 
     boiler = " ".join(f"b{i}" for i in range(9))   # 9 tokens -> 2 windows
     rows = [
@@ -694,14 +695,11 @@ def test_refs_pagerank_matches_python_reference(spark):
 
     import pyarrow.parquet as pq
 
-    from pdftext_spark.queries import (
-        _PR_ITERS,
-        _PR_SCALE,
-        q_refs_pagerank,
-    )
+    from pdftext_spark.registry.extraction import (
+        _PR_ITERS, _PR_SCALE, q_refs_pagerank)
 
     sf = "/root/testdata/sf0.001"
-    from pdftext_spark.queries import _fixture_path
+    from pdftext_spark.registry._shared import _fixture_path
     t = pq.read_table(_fixture_path(sf, "expected_spans.parquet"),
                       columns=["conv_id", "turn_idx", "block_idx",
                                "line_idx", "span_idx", "url"]).to_pylist()
@@ -738,7 +736,8 @@ def test_text_ccnet_buckets_monotone_and_balanced(spark):
     """Buckets must be monotone in score (every head <= every middle <=
     every tail) and, with sample thresholds from a representative 20%
     md5 sample, roughly tertile-sized on the full corpus."""
-    from pdftext_spark.queries import q_text_ccnet, unpersist_registered
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.textqual import q_text_ccnet
 
     rows = q_text_ccnet(spark, "/root/testdata/sf0.001").collect()
     by = {}
@@ -810,7 +809,7 @@ def test_events_asof_chunked_form_identical(spark):
     """The segmented (user, day-chunk) as-of — the no-user-serializes
     scale form — must be ROW-IDENTICAL to the single-window form, and
     its heavy shuffle must key on (user_id, chunk)."""
-    from pdftext_spark.queries import q_events_asof
+    from pdftext_spark.registry.relational import q_events_asof
 
     sf = "/root/testdata/sf0.001"
     cols = ("event_id", "user_id", "purchase_us", "touch_event_id",
@@ -843,7 +842,8 @@ def test_events_pattern_contiguity(spark, tmp_path):
     limit and excludes beyond; other users' events never interleave."""
     import datetime as dt
 
-    from pdftext_spark.queries import _PATTERN_SPAN_US, q_events_pattern
+    from pdftext_spark.registry.relational import (
+        _PATTERN_SPAN_US, q_events_pattern)
 
     t0 = dt.datetime(2024, 1, 1)
     span_s = _PATTERN_SPAN_US // 1_000_000
@@ -879,12 +879,9 @@ def test_events_window_sliding_coverage(spark):
     offset shift."""
     import os
 
-    from pdftext_spark.queries import (
-        _SLIDE_K,
-        q_events_window,
-        q_events_window_sliding,
-        unpersist_registered,
-    )
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.relational import (
+        _SLIDE_K, q_events_window, q_events_window_sliding)
 
     sf = "/root/testdata/sf0.001"
     rows = q_events_window_sliding(spark, sf).collect()

@@ -5,7 +5,7 @@ import re
 
 import pytest  # noqa: F401
 
-from pdftext_spark.queries import q_events_sessionize
+from pdftext_spark.registry.relational import q_events_sessionize
 
 
 def _write_events(tmp_path, rows):
@@ -89,7 +89,7 @@ def test_events_funnel_chunked_form_identical(spark):
     """The segmented (user, day-chunk) funnel must be ROW-IDENTICAL to
     the single-collect form; its heavy shuffle keys on (user_id, chunk)
     and the per-user reduce only ever sees one row per active user-day."""
-    from pdftext_spark.queries import q_events_funnel
+    from pdftext_spark.registry.relational import q_events_funnel
 
     sf = "/root/testdata/sf0.001"
     cols = ("user_id", "stage", "t0", "t1", "t2", "t3")
@@ -111,7 +111,7 @@ def test_events_funnel_chunked_semantics(spark, tmp_path):
     across days compose (the carried entry time is strictly before the
     whole next chunk), strict-after still binds WITHIN a chunk, and a
     later-chunk stage event never beats an earlier chunk's min."""
-    from pdftext_spark.queries import q_events_funnel
+    from pdftext_spark.registry.relational import q_events_funnel
 
     t0 = dt.datetime(2024, 3, 1)
     eid = [0]
@@ -166,11 +166,9 @@ def test_dedup_jaccard_prefix_filter(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pdftext_spark.queries import (
-        q_dedup_jaccard,
-        q_dedup_jaccard_prefix,
-        unpersist_registered,
-    )
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.dedup import (
+        q_dedup_jaccard, q_dedup_jaccard_prefix)
 
     # crafted corpus: docs 1/2 share exactly 8 of 10 distinct shingles
     # each (J = 8/12 < 0.8), docs 3/4 are identical (J = 1), docs 5/6
@@ -222,7 +220,7 @@ def test_ann_maxip_norm_term_matters(spark):
     """MIPS must genuinely disagree with cosine on the derived-magnitude
     candidates (else the new metric is cosine in disguise), while the
     plan keeps the broadcast-queries x one-scan shape."""
-    from pdftext_spark.queries import q_ann_bruteforce, q_ann_maxip
+    from pdftext_spark.registry.ann import q_ann_bruteforce, q_ann_maxip
 
     sf = "/root/testdata/sf0.001"
     mip_df = q_ann_maxip(spark, sf)
@@ -244,8 +242,9 @@ def test_dedup_semantic_cluster_restriction(spark):
     dropped set (zero false positives), with the measured recall of the
     K=8 clustering pinned, and the pair join keyed on the cluster id
     (the one shuffle that replaces the all-pairs product)."""
-    from pdftext_spark.queries import (q_dedup_semantic, q_dedup_embedding,
-                                       unpersist_registered)
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.dedup import (
+        q_dedup_semantic, q_dedup_embedding)
 
     sf = "/root/testdata/sf0.01"
     sem_df = q_dedup_semantic(spark, sf)
@@ -278,8 +277,8 @@ def test_text_bm25_ranking_semantics(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pdftext_spark.queries import (_BM25_QUERIES, q_text_bm25,
-                                       unpersist_registered)
+    from pdftext_spark.queries import unpersist_registered
+    from pdftext_spark.registry.textqual import _BM25_QUERIES, q_text_bm25
 
     pad = " ".join(["zz"] * 40)
     rows = [

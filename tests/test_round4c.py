@@ -7,10 +7,10 @@ import hashlib
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pdftext_spark.queries import q_text_chunks_cdc, q_text_winnow
+from pdftext_spark.registry.textqual import q_text_chunks_cdc, q_text_winnow
 
-_W = 4   # winnowing window (queries._WINNOW_W)
-_DIV = 16  # CDC divisor (queries._CDC_DIV)
+_W = 4   # winnowing window (registry.textqual._WINNOW_W)
+_DIV = 16  # CDC divisor (registry.textqual._CDC_DIV)
 
 
 def _toks(text):
@@ -156,7 +156,7 @@ def test_events_scd2_runs_one_shuffle(spark, tmp_path):
     (not a merge), validity intervals chain exactly (valid_to = next
     valid_from, open current version NULL), and the whole history build
     costs ONE user-keyed shuffle."""
-    from pdftext_spark.queries import q_events_scd2
+    from pdftext_spark.registry.pipeline import q_events_scd2
 
     sf = _write_events(tmp_path, [
         (1, 0, "view"), (1, 5, "view"), (1, 10, "click"), (1, 20, "view"),
@@ -184,7 +184,8 @@ def test_snapshot_merge_precedence_and_plan(spark, tmp_path):
     override seq-1 on the same key, plain updates rewrite, inserts land
     at offset keys, untouched rows keep their text — and the merge is
     one full-outer SortMergeJoin (no broadcast assumption)."""
-    from pdftext_spark.queries import _MERGE_INS_OFFSET, q_snapshot_merge
+    from pdftext_spark.registry.pipeline import (
+        _MERGE_INS_OFFSET, q_snapshot_merge)
 
     texts = {i: f"body of doc {i}" for i in range(1, 101)}
     sf = _write_docs(tmp_path, [texts[i] for i in range(1, 101)])
@@ -216,7 +217,7 @@ def test_layout_zorder_bounds_both_axes(spark):
     and the report costs one shuffle of pre-aggregated rows."""
     from pyspark.sql import functions as F
 
-    from pdftext_spark.queries import _Z_MUL_LIMIT, q_layout_zorder
+    from pdftext_spark.registry.pipeline import _Z_MUL_LIMIT, q_layout_zorder
 
     sf = "/root/testdata/sf0.001"
     df = q_layout_zorder(spark, sf)
@@ -252,8 +253,8 @@ def test_star_components_label_identical(spark):
     one-hop propagation would need 60 rounds), a hot-hub star (the
     celebrity-node case it exists for), two disjoint components, and the
     real minhash-LSH pair graph."""
-    from pdftext_spark.queries import (min_label_components,
-                                       q_dedup_clusters, star_components)
+    from pdftext_spark.registry.dedup import (
+        min_label_components, q_dedup_clusters, star_components)
 
     def labels(df):
         return sorted((r["doc_id"], r[df.columns[1]]) for r in df.collect())
@@ -307,7 +308,7 @@ def test_mm_phash_replica_and_banded_neardup(spark, tmp_path):
     — and the banded Hamming join must return EXACTLY the brute-force
     <=6 pairs (pigeonhole completeness at 8x8 bands) without an
     all-pairs product in the plan."""
-    from pdftext_spark.queries import q_mm_neardup, q_mm_phash
+    from pdftext_spark.registry.multimodal import q_mm_neardup, q_mm_phash
 
     base = " ".join(f"tok{i} value{i * 7 % 13}" for i in range(40))
     texts = [base, base,                       # exact body dup: hamming 0

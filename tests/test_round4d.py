@@ -6,9 +6,10 @@ import hashlib
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pdftext_spark.queries import (_BLOOM_PROBES, _bloom_positions,
-                                   q_events_quantiles, q_text_bloom,
-                                   q_text_hll, q_text_pmi, q_text_postings)
+from pdftext_spark.registry.pipeline import q_events_quantiles
+from pdftext_spark.registry.textqual import (
+    _BLOOM_PROBES, _bloom_positions, q_text_bloom, q_text_hll, q_text_pmi,
+    q_text_postings)
 
 
 def _h32(s):
@@ -205,8 +206,8 @@ def test_text_bloom_coincident_positions_cross_engine(spark, tmp_path):
     doubled the bit into the wrong position, or overflowed at 63)."""
     import duckdb
 
-    from pdftext_spark.queries import (_bloom_positions, q_text_bloom,
-                                       sql_text_bloom)
+    from pdftext_spark.registry.textqual import (
+        _bloom_positions, q_text_bloom, sql_text_bloom)
 
     for t in ("ur", "ctx"):
         p1, p2 = _bloom_positions(t)
@@ -230,7 +231,7 @@ def test_graph_triangles_edge_frame_materialized_once(spark):
     """Regression (review finding): the triple self-join must run on the
     checkpointed edge frame — zero parquet scans in the executed plan
     (previously 12: each branch re-derived the LSH pipeline)."""
-    from pdftext_spark.queries import q_graph_triangles
+    from pdftext_spark.registry.textqual import q_graph_triangles
     df = q_graph_triangles(spark, "/root/testdata/sf0.001")
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "FileScan" not in p
@@ -244,7 +245,7 @@ def test_layout_zorder_empty_input(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pdftext_spark.queries import q_layout_zorder
+    from pdftext_spark.registry.pipeline import q_layout_zorder
     pq.write_table(pa.Table.from_pylist([], schema=pa.schema(
         [("event_id", pa.int64()), ("ts", pa.timestamp("us")),
          ("user_id", pa.int64()), ("event_type", pa.string()),

@@ -6,10 +6,9 @@ import hashlib
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pdftext_spark.queries import (_BLOOM_PROBES, _CMS_D, _CMS_W,
-                                   _cms_slot, q_dataset_split,
-                                   q_doc_profile, q_graph_triangles,
-                                   q_text_cms)
+from pdftext_spark.registry.textqual import (
+    _BLOOM_PROBES, _CMS_D, _CMS_W, _cms_slot, q_dataset_split, q_doc_profile,
+    q_graph_triangles, q_text_cms)
 
 
 def _toks(text):
@@ -153,7 +152,7 @@ def test_events_outliers_zscore_and_broadcast(spark, tmp_path):
     import datetime as dt
     import math
 
-    from pdftext_spark.queries import q_events_outliers
+    from pdftext_spark.registry.pipeline import q_events_outliers
 
     t0 = dt.datetime(2024, 3, 1)
     vals = [10.0, 11.0, 9.0, 10.5, 9.5] * 8 + [1000.0]
@@ -193,8 +192,8 @@ def test_ann_pq_replica_and_refinement(spark):
     mean reconstruction similarity vs the round-0 seed codebooks."""
     import numpy as np
 
-    from pdftext_spark.queries import (_PQ_D, _PQ_ITERS, _PQ_K, _PQ_M,
-                                       q_ann_pq)
+    from pdftext_spark.registry.ann import (
+        _PQ_D, _PQ_ITERS, _PQ_K, _PQ_M, q_ann_pq)
 
     sf = "/root/testdata/sf0.001"
     t = pq.read_table(f"{sf}/embeddings.parquet")
@@ -255,7 +254,7 @@ def test_text_bpe_merge_table_replica(spark, tmp_path):
     LEFTMOST non-overlapping merge application) — including the overlap
     case: 'aaaa' under merge (a,a) becomes [aa, aa], never [aa, a, a],
     which is what makes SQL replace() the correct merge operator."""
-    from pdftext_spark.queries import _BPE_ROUNDS, q_text_bpe
+    from pdftext_spark.registry.textqual import _BPE_ROUNDS, q_text_bpe
 
     docs = (["low low low low low"] * 2
             + ["lower lower", "newest newest newest",
@@ -307,8 +306,8 @@ def test_ann_pq_adc_exactness_and_recall(spark):
     K=4 demo trades recall for a 2-bit code)."""
     import numpy as np
 
-    from pdftext_spark.queries import (_PQ_D, _PQ_ITERS, _PQ_K, _PQ_M,
-                                       q_ann_bruteforce, q_ann_pq_adc)
+    from pdftext_spark.registry.ann import (
+        _PQ_D, _PQ_ITERS, _PQ_K, _PQ_M, q_ann_bruteforce, q_ann_pq_adc)
 
     sf = "/root/testdata/sf0.001"
     t = pq.read_table(f"{sf}/embeddings.parquet")
@@ -378,7 +377,7 @@ def test_events_skew_report_salt_math_and_plan(spark, tmp_path):
     shuffle and use a partial top-k, never a global sort."""
     import datetime as dt
 
-    from pdftext_spark.queries import q_events_skew_report
+    from pdftext_spark.registry.pipeline import q_events_skew_report
 
     t0 = dt.datetime(2024, 3, 1)
     rows = [(999, i) for i in range(500)] + \
@@ -414,7 +413,7 @@ def test_events_histogram_equidepth(spark, tmp_path):
     and lo/hi are non-decreasing."""
     import datetime as dt
 
-    from pdftext_spark.queries import q_events_histogram
+    from pdftext_spark.registry.pipeline import q_events_histogram
 
     t0 = dt.datetime(2024, 3, 1)
     rows = [("A", float(v)) for v in range(1, 101)] + \

@@ -15,9 +15,9 @@ import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pdftext_spark.queries import (q_events_funnel, q_text_bpe,
-                                   q_text_winnow, sql_text_bpe,
-                                   sql_text_winnow)
+from pdftext_spark.registry.relational import q_events_funnel
+from pdftext_spark.registry.textqual import (
+    q_text_bpe, q_text_winnow, sql_text_bpe, sql_text_winnow)
 
 
 def _write_docs(tmp_path, texts):
@@ -202,8 +202,8 @@ def test_exact_substring_dedup_pins_planted_passages(spark, tmp_path):
 
     from pdftext_spark.operators.substring import (partition_repeats,
                                                    repeated_intervals)
-    from pdftext_spark.queries import (q_dedup_substr_exact,
-                                       sql_dedup_substr_exact)
+    from pdftext_spark.registry.pipeline import (
+        q_dedup_substr_exact, sql_dedup_substr_exact)
 
     passage = ("alpha bravo charlie delta echo foxtrot golf hotel "
                "india juliett")
@@ -244,7 +244,7 @@ def test_exact_substring_dedup_intra_doc_and_gap_merge(spark, tmp_path):
     """Lee-et-al semantics include repeats WITHIN one doc; overlapping
     planted repeats must merge into one maximal interval."""
     from pdftext_spark.operators.substring import repeated_intervals
-    from pdftext_spark.queries import q_dedup_substr_exact
+    from pdftext_spark.registry.pipeline import q_dedup_substr_exact
 
     rep8 = "r1 r2 r3 r4 r5 r6 r7 r8"
     texts = [
@@ -281,8 +281,8 @@ def test_exact_substring_scrub_keeps_first_occurrence(spark, tmp_path):
     with the DuckDB oracle row-for-row."""
     import duckdb
 
-    from pdftext_spark.queries import (q_dedup_substr_scrub,
-                                       sql_dedup_substr_scrub)
+    from pdftext_spark.registry.pipeline import (
+        q_dedup_substr_scrub, sql_dedup_substr_scrub)
 
     passage = ("alpha bravo charlie delta echo foxtrot golf hotel "
                "india juliett")
@@ -323,8 +323,8 @@ def test_bpe_encode_matches_hand_derivation(spark, tmp_path):
     word 1 symbol; 'b' -> 1 word 1 symbol."""
     import duckdb
 
-    from pdftext_spark.queries import (q_text_bpe, q_text_bpe_encode,
-                                       sql_text_bpe, sql_text_bpe_encode)
+    from pdftext_spark.registry.textqual import (
+        q_text_bpe, q_text_bpe_encode, sql_text_bpe, sql_text_bpe_encode)
 
     texts = ["ab ab ab", "abab", "abab", "b"]
     sf = _write_docs(tmp_path, texts)
@@ -352,8 +352,8 @@ def test_quantile_sketch_merges_and_bounds_exact_quantiles(spark):
     the non-positive tail by design)."""
     from pyspark.sql import functions as F
 
-    from pdftext_spark.queries import (q_events_quantiles,
-                                       q_events_quantiles_sketch)
+    from pdftext_spark.registry.pipeline import (
+        q_events_quantiles, q_events_quantiles_sketch)
 
     sf = "/root/testdata/sf0.001"
     ev = spark.read.parquet(f"{sf}/events.parquet")

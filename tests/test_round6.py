@@ -123,7 +123,9 @@ def test_route_batch_arrow_equals_list():
 def test_lone_surrogate_turn_costs_one_turn():
     """A str turn that is not valid UTF-8 (a lone surrogate) must land in
     its own row's error channel; the other turns of the call — prose,
-    payload and HTML alike — come out exactly as they do without it."""
+    payload and HTML alike — come out exactly as they do without it. So
+    must a payload that spells the surrogate as a JSON escape: valid
+    UTF-8 that orjson rejects and the stdlib fallback decodes."""
     from pdftext_spark.config import ExtractConfig
     from pdftext_spark.core.api import process_batch
 
@@ -134,14 +136,19 @@ def test_lone_surrogate_turn_costs_one_turn():
     roles = ["user", "user", "tool"]
     cfg = ExtractConfig()
     ref = process_batch(good, roles, [0, 1, 2], cfg)
-    for bad, role in (("bad \ud800 prose", "user"),
-                      ('{"kind":"chars","page_bbox":[0,0,100,100],'
-                       '"text":"h\udfff","bbox":[1,2,3,4,5,6,7,8]}', "user"),
-                      ("<p>\ud800</p>", "tool")):
+    for bad, role, err in (
+            ("bad \ud800 prose", "user", "UnicodeDecodeError("),
+            ('{"kind":"chars","page_bbox":[0,0,100,100],'
+             '"text":"h\udfff","bbox":[1,2,3,4,5,6,7,8]}', "user",
+             "UnicodeDecodeError("),
+            ('{"kind":"chars","page_bbox":[0,0,100,100],'
+             '"text":"h\\ud800","bbox":[1,2,3,4,5,6,7,8]}', "user",
+             "UnicodeEncodeError("),
+            ("<p>\ud800</p>", "tool", "UnicodeDecodeError(")):
         outs = process_batch(good[:1] + [bad] + good[1:],
                              roles[:1] + [role] + roles[1:], [0, 9, 1, 2], cfg)
         assert outs[1].text == ""
-        assert outs[1].error.startswith("UnicodeDecodeError(")
+        assert outs[1].error.startswith(err)
         assert [(o.text, o.error, o.page) for o in outs[:1] + outs[2:]] == \
             [(o.text, o.error, o.page) for o in ref]
 
@@ -175,3 +182,124 @@ def test_kernel_runs_from_foreign_cwd(tmp_path):
                        capture_output=True, text=True, env=env, timeout=300)
     assert r.returncode == 0 and "CWD-OK" in r.stdout, (
         r.stdout[-500:], r.stderr[-2000:])
+
+
+def test_build_session_local_only_settings(monkeypatch):
+    """The workers' PYTHONPATH (driver-local paths) and the 4m scan-split
+    default are set only when the master is local; an explicit split
+    size, by argument or environment, applies on any master."""
+    import types
+
+    from pdftext_spark.sources import session
+
+    class _Recorder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, _name):
+            return self
+
+        def master(self, _master):
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    def confs(**kw):
+        monkeypatch.setattr(session, "SparkSession",
+                            types.SimpleNamespace(builder=_Recorder()))
+        return session.build_session(**kw)
+
+    pp = "spark.executorEnv.PYTHONPATH"
+    mpb = "spark.sql.files.maxPartitionBytes"
+    monkeypatch.delenv("PDFTEXT_SPARK_MAX_PARTITION_BYTES", raising=False)
+    local = confs(master="local[2]")
+    assert local[mpb] == "4m" and pp in local
+    cluster = confs(master="spark://h:7077")
+    assert mpb not in cluster and pp not in cluster
+    assert confs(master="spark://h:7077", max_partition_bytes="64m")[mpb] \
+        == "64m"
+    monkeypatch.setenv("PDFTEXT_SPARK_MAX_PARTITION_BYTES", "32m")
+    cluster = confs(master="spark://h:7077")
+    assert cluster[mpb] == "32m" and pp not in cluster
+
+
+def test_kernel_imports_leave_out_registry_and_pandas():
+    """The Python workers import the kernel by reference (core.api,
+    core.arrow_out, operators.extract); that closure must not load the
+    operator registry or pandas, and neither may a plain-text batch."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent("""
+        import sys
+
+        import numpy as np
+        import pyarrow as pa
+
+        from pdftext_spark.config import ExtractConfig
+        from pdftext_spark.core.api import route_batch
+        import pdftext_spark.core.arrow_out  # noqa: F401
+        from pdftext_spark.operators.extract import _fill_text, _string_array
+
+        texts = [b'prose turn', b'<p>html</p>',
+                 b'{"kind":"chars","page_bbox":[0,0,9,9],"text":"a",'
+                 b'"bbox":[1,1,2,2]}']
+        offs = np.cumsum([0] + [len(t) for t in texts]).astype(np.int32)
+        arr = pa.StringArray.from_buffers(3, pa.py_buffer(offs),
+                                          pa.py_buffer(b"".join(texts)))
+        rb = route_batch(arr, ["user", "tool", "user"], [0, 1, 2],
+                         ExtractConfig())
+        out = _string_array(_fill_text(rb, lambda rb: rb.plains))
+        assert out.to_pylist() == ["prose turn", "html", "a"], out
+        print(sorted(m for m in sys.modules if m == "pandas" or m.startswith(
+            ("pdftext_spark.queries", "pdftext_spark.registry"))))
+        """)
+    r = subprocess.run([sys.executable, "-c", script], cwd=repo,
+                       capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.strip() == "[]", r.stdout
+
+
+def test_dup_masks_exact_under_hash_collisions():
+    """segment._dup_masks picks candidate rows by a wrapping hash and
+    decides by exact row equality: rows built to collide under the hash
+    stay distinct, and both masks match a dict reference."""
+    import collections
+
+    import numpy as np
+
+    from pdftext_spark.core.segment import _ROW_MIX, _dup_masks
+
+    # x0*C0 + x1*C1 == (x0 + C1)*C0 + (x1 - C0)*C1  (mod 2**64)
+    a = np.array([3, 5, 7], dtype=np.uint64)
+    b = (a + np.array([_ROW_MIX[1], 0, 0], dtype=np.uint64)
+         - np.array([0, _ROW_MIX[0], 0], dtype=np.uint64))
+    rng = np.random.default_rng(8)
+    for k in (3, 5, 8):
+        rows = rng.integers(-2, 3, size=(400, k)).astype(np.int64)
+        rows[[7, 90, 200], :3] = a.view(np.int64)
+        rows[[7, 90, 200], 3:] = 0
+        rows[[40, 300], :3] = b.view(np.int64)
+        rows[[40, 300], 3:] = 0
+        h = rows.view(np.uint64) @ _ROW_MIX[:k]
+        assert h[7] == h[40] and (rows[7] != rows[40]).any()
+        keys = [tuple(r) for r in rows.tolist()]
+        count = collections.Counter(keys)
+        seen: set = set()
+        later = []
+        for key in keys:
+            later.append(key in seen)
+            seen.add(key)
+        dup_any, dup_later = _dup_masks(np.ascontiguousarray(rows))
+        assert dup_any.tolist() == [count[key] > 1 for key in keys]
+        assert dup_later.tolist() == later
+    none = np.arange(12, dtype=np.int64).reshape(4, 3)
+    assert not any(m.any() for m in _dup_masks(none))

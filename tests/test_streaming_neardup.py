@@ -23,7 +23,7 @@ def _oracle_admitted(spark, rows):
     order here): dropped iff some smaller doc_id shares a band bucket
     AND exact Jaccard over hashed shingle sets >= the threshold — the
     batch twin's rule made directional."""
-    from pdftext_spark.queries import minhash_bands, minhash_signature
+    from pdftext_spark.registry.dedup import minhash_bands, minhash_signature
     from pdftext_spark.streaming.neardup import NEARDUP_JACCARD
     sig = minhash_signature(spark.createDataFrame(rows, SCHEMA)) \
         .select("doc_id", "shset").persist()

@@ -268,7 +268,7 @@ def test_asof_stream_matches_batch_across_restart(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from pdftext_spark.queries import q_events_asof
+    from pdftext_spark.registry.relational import q_events_asof
     from pdftext_spark.streaming.asof import asof_stream
 
     sf = "/root/testdata/sf0.001"
