@@ -7,12 +7,12 @@ char-stream payload (or plain prose, which degrades to a synthesized
 monospace layout) and goes through the segmentation kernel.
 
 Two consumers share the routing/segmentation core (`route_batch`), which
-reads an Arrow string column — one payload parser for both:
-- `process_batch` → per-turn dicts (tests, the keep_chars path); it
-  converts its `list[str]` to that column first;
-- the Spark kernel (operators/extract.py) → columnar pyarrow output
-  built straight from segmentation offsets (no per-span Python dicts,
-  no pandas→Arrow conversion).
+reads an Arrow string column, and the one page assembler
+(`core/arrow_out.build_page_array`), which builds the nested pages
+straight from segmentation offsets:
+- the Spark kernel (operators/extract.py) emits Arrow record batches;
+- `process_batch` (the local library API and tests) converts its
+  `list[str]` to that column first and the page rows to dicts after.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ import numpy as np
 import pyarrow as pa
 
 from pdftext_spark.config import ExtractConfig
-from pdftext_spark.core.assemble import plain_text_batch, struct_page
+from pdftext_spark.core.assemble import plain_text_batch
 from pdftext_spark.core.html_main import extract_main_text
 from pdftext_spark.core.links import merge_turn_links
 from pdftext_spark.core.payload import (
@@ -199,6 +199,9 @@ def route_batch(texts, roles: list, turn_idxs: list,
 
 def process_batch(texts: list, roles: list, turn_idxs: list,
                   cfg: ExtractConfig = ExtractConfig()) -> list[TurnOutput]:
+    # arrow_out imports RoutedBatch from this module
+    from pdftext_spark.core.arrow_out import build_page_array
+
     # surrogatepass + a binary→string view: a lone surrogate reaches
     # route_batch as invalid UTF-8 and fails its own turn's decode,
     # where pa.array(texts, pa.string()) would fail the whole call
@@ -206,17 +209,16 @@ def process_batch(texts: list, roles: list, turn_idxs: list,
                     for t in texts], pa.binary()).view(pa.string())
     rb = route_batch(arr, roles, turn_idxs, cfg)
     seg = rb.seg
+    if cfg.emit_struct and rb.doc_pos:
+        pages = [_page_dict(p, cfg.keep_chars)
+                 for p in build_page_array(rb, cfg).to_pylist()]
+    else:
+        pages = [None] * len(rb.doc_pos)
     for local, i in enumerate(rb.doc_pos):
-        page = None
-        if cfg.emit_struct:
-            page = struct_page(seg, local, rb.page_ids[local],
-                               keep_chars=cfg.keep_chars, sort=cfg.sort,
-                               span_splits=rb.splits_by_local.get(local),
-                               sort_tolerance=cfg.sort_tolerance)
         blo, bhi = int(seg.turn_block_lo[local]), int(seg.turn_block_hi[local])
         rb.outputs[i] = TurnOutput(
             text=rb.plains[local],
-            page=page,
+            page=pages[local],
             tables=rb.tables_by_local.get(local, []),
             registrations=rb.regs_by_local.get(local, []),
             n_chars=int(rb.char_counts[local]),
@@ -224,6 +226,27 @@ def process_batch(texts: list, roles: list, turn_idxs: list,
             n_blocks=bhi - blo,
         )
     return rb.outputs  # type: ignore[return-value]
+
+
+def _page_dict(page: dict, keep_chars: bool) -> dict:
+    """One build_page_array row in dictionary_output key order (the
+    reference's, extraction.py:83-131): lines and spans before bbox, a
+    chars key only with keep_chars, each char carrying its span's font."""
+    blocks = []
+    for blk in page["blocks"]:
+        lines = []
+        for ln in blk["lines"]:
+            for sp in ln["spans"]:
+                chars = sp.pop("chars")
+                if keep_chars:
+                    font = sp["font"]
+                    sp["chars"] = [{"bbox": c["bbox"], "char": c["char"],
+                                    "rotation": c["rotation"], "font": font,
+                                    "char_idx": c["char_idx"]} for c in chars]
+            lines.append({"spans": ln["spans"], "bbox": ln["bbox"]})
+        blocks.append({"lines": lines, "bbox": blk["bbox"]})
+    page["blocks"] = blocks
+    return page
 
 
 def _span_start_mask(seg: Segmentation) -> np.ndarray:

@@ -2,9 +2,10 @@
 
 Builds the nested `page` column (blocks→lines→spans) DIRECTLY from
 segmentation offsets as Arrow ListArray/StructArray — no per-span Python
-dicts and no pandas→Arrow conversion. This is the ONLY Spark path
-(`mapInArrow`, keep_chars included); the dict-based `struct_page`
-remains for no-JVM library use and tests.
+dicts and no pandas→Arrow conversion. `build_page_array` is the only
+page assembler: the Spark kernel (`mapInArrow`, keep_chars included)
+emits its rows as they are, and `core.api.process_batch` (local library
+use and tests) converts them to page dicts.
 
 Hierarchy offsets fall out of the segmentation for free: spans are
 contiguous char ranges, lines contiguous span ranges, blocks contiguous
@@ -142,9 +143,8 @@ def build_page_array(rb: RoutedBatch, cfg: ExtractConfig) -> pa.StructArray:
             sub_out[row] = False
 
     # span texts (F8): one global postprocess pass + a slice per output
-    # span (postprocess_range per span walked the pass machinery 10x+
-    # per line); output rows are contiguous ranges, so masking \r\n
-    # collapse at their starts makes every slice exact
+    # span; output rows are contiguous ranges, so masking \r\n collapse
+    # at their starts makes every slice exact
     texts = postprocess_ranges(seg, start_out, end_out, hyphen_sentinel=True)
 
     # ---- permutations for reading-order sort (identity when sort=False) ----

@@ -1,5 +1,6 @@
-"""Output assembly: plain-text rendering (F7) and structured page dicts
-(P2 projection + F8 + rotation fix-ups).
+"""Output assembly helpers: the plain-text render (F7), the span-text
+pass (F8) and the reading-order sort (O1). core/arrow_out.py builds the
+structured pages from these; plain text is rendered here directly.
 
 Reference lifecycle: SURVEY.md §3.1-3.2; pdftext/postprocessing.py:95-113,
 pdftext/extraction.py:70-131.
@@ -14,15 +15,9 @@ import numpy as np
 from pdftext_spark.core.segment import Segmentation
 from pdftext_spark.core.textproc import (
     LIGATURE_MAP,
-    _cc_delete_re,
     _specials_table,
     handle_hyphens,
 )
-
-
-def _round_half_even(x: float) -> float:
-    # Python round() — banker's rounding, used by sort keys.
-    return round(x, 0)
 
 
 def sort_order(bboxes: list, tolerance: float = 1.25) -> list[int]:
@@ -37,66 +32,12 @@ def sort_order(bboxes: list, tolerance: float = 1.25) -> list[int]:
     return order
 
 
-def turn_line_ranges(seg: Segmentation, turn: int) -> list[tuple[int, int]]:
-    """(line_lo, line_hi) per block of a turn, in creation order."""
-    lo, hi = int(seg.turn_block_lo[turn]), int(seg.turn_block_hi[turn])
-    return [(int(seg.blocks.line_lo[b]), int(seg.blocks.line_hi[b])) for b in range(lo, hi)]
-
-
-def postprocess_range(seg: Segmentation, a: int, b: int) -> str:
-    """postprocess_text over chars [a, b) of the post-dedup global string,
-    skipping passes the prefix-sum flags prove unobservable (the common
-    pure-ASCII case touches no regex or translate machinery)."""
-    text = seg.chars.gtext[a:b]
-    if seg.tr_cum[b] - seg.tr_cum[a]:
-        text = text.replace("\r\n", "\n").translate(_specials_table())
-    if seg.cc_cum[b] - seg.cc_cum[a]:
-        text = _cc_delete_re().sub("", text)
-    return text
-
-
-def merge_text_turn(seg: Segmentation, turn: int, sort: bool = False,
-                    hyphens: bool = False,
-                    sort_tolerance: float = 1.25) -> str:
-    """F7 — plain-text render of one turn (postprocessing.py:95-113).
-
-    Per line: concat spans, postprocess, rstrip + newline; per block:
-    rstrip + double newline; whole page through handle_hyphens.
-    """
-    blo, bhi = int(seg.turn_block_lo[turn]), int(seg.turn_block_hi[turn])
-    block_ids = list(range(blo, bhi))
-    if sort and block_ids:
-        bboxes = [seg.blocks.bbox[b] for b in block_ids]
-        block_ids = [block_ids[i] for i in sort_order(bboxes, sort_tolerance)]
-    line_lo = seg.blocks.line_lo
-    line_hi = seg.blocks.line_hi
-    sp_start = seg.spans.start
-    sp_end = seg.spans.end
-    ln_start = seg.lines.start
-    ln_end = seg.lines.end
-    parts: list[str] = []
-    for b in block_ids:
-        lines_out: list[str] = []
-        for li in range(int(line_lo[b]), int(line_hi[b])):
-            a = int(sp_start[ln_start[li]])
-            z = int(sp_end[ln_end[li] - 1])
-            lines_out.append(postprocess_range(seg, a, z).rstrip() + "\n")
-        parts.append("".join(lines_out).rstrip() + "\n\n")
-    text = "".join(parts)
-    # hyphen pass: skip the stateful scan when the turn has no \x02 at all
-    # (keep=False still drops the final char — postprocessing.py:39)
-    clo, chi = int(seg.turn_char_lo[turn]), int(seg.turn_char_hi[turn])
-    if seg.hy_cum[chi] - seg.hy_cum[clo] == 0:
-        return text if hyphens else text[:-1]
-    return handle_hyphens(text, keep_hyphens=hyphens)
-
-
 def postprocess_global(seg: Segmentation, range_starts) -> tuple[str, Optional[np.ndarray]]:
     """The whole replace+translate+control-filter pass applied ONCE over
     the post-dedup global string, such that ``g_full[off[a]:off[b]]``
-    equals ``postprocess_range(seg, a, b)`` for every range whose
-    endpoints lie on ``range_starts`` boundaries (off=None means offsets
-    are the identity).
+    equals ``postprocess_text(seg.chars.gtext[a:b])`` for every range
+    whose endpoints lie on ``range_starts`` boundaries (off=None means
+    offsets are the identity).
 
     1. 1:1 maps (spaces/line-breaks/tabs) as a vectorized codepoint
        remap + one utf-32 decode (str.translate with a dict table walks
@@ -106,9 +47,10 @@ def postprocess_global(seg: Segmentation, range_starts) -> tuple[str, Optional[n
        control-char DELETIONS — spliced in at their (few) positions,
        with per-char output lengths cumsum'd into an offset map so every
        range is a plain slice.
-    postprocess_range slices FIRST, so a \\r\\n pair straddling a range
-    boundary keeps its \\r as "\\n" — pair collapse is therefore masked
-    where the \\n is a range start, making the slice exact there too.
+    postprocess_text of a slice sees the slice alone, so a \\r\\n pair
+    straddling a range boundary keeps its \\r as "\\n" — pair collapse
+    is therefore masked where the \\n is a range start, making the slice
+    exact there too.
     The deletion mask is cc_flag MINUS the specials-mapped codepoints:
     _cc_delete_re carves those out of its char class (they translate to
     spaces instead of being dropped) while the batch flag deliberately
@@ -162,8 +104,8 @@ def postprocess_global(seg: Segmentation, range_starts) -> tuple[str, Optional[n
 
 def postprocess_ranges(seg: Segmentation, starts, ends,
                        hyphen_sentinel: bool = False) -> list[str]:
-    """postprocess_range over many contiguous ranges at once (the F8 span
-    texts): one global pass + a slice per range; with hyphen_sentinel,
+    """postprocess_text over many contiguous char ranges at once (the F8
+    span texts): one global pass + a slice per range; with hyphen_sentinel,
     ranges containing \\x02 get the keep-hyphens replacement applied."""
     g_full, off = postprocess_global(seg, starts)
     if off is None:
@@ -196,12 +138,8 @@ def plain_text_batch(seg: Segmentation, sort: bool = False,
     per-char output lengths into an offset map, so EVERY line is a plain
     slice. Measured 18 → 3.7 ms on the sf0.01 batch; output identical on
     both fixture tiers, the property suite, and adversarial
-    ligature/CRLF/control mixes. sort=True keeps the per-turn path:
-    block reorder is per turn anyway."""
-    if sort:
-        return [merge_text_turn(seg, t, sort, hyphens, sort_tolerance).strip()
-                for t in range(seg.n_turns)]
-
+    ligature/CRLF/control mixes. sort=True renders the same lines and
+    only visits each turn's blocks in sort_order."""
     a_arr = seg.spans.start[seg.lines.start]
     z_arr = seg.spans.end[seg.lines.end - 1]
     # Boundary note: with collapse masked at line starts, a \r\n pair
@@ -215,6 +153,7 @@ def plain_text_batch(seg: Segmentation, sort: bool = False,
     else:
         a_l, z_l = off[a_arr].tolist(), off[z_arr].tolist()
     line_strs = [g_full[a:z].rstrip() for a, z in zip(a_l, z_l)]
+    block_bbox = seg.blocks.bbox
     line_lo = seg.blocks.line_lo.tolist()
     line_hi = seg.blocks.line_hi.tolist()
     tb_lo = seg.turn_block_lo.tolist()
@@ -224,12 +163,17 @@ def plain_text_batch(seg: Segmentation, sort: bool = False,
     out = []
     for t in range(seg.n_turns):
         parts = []
-        for b in range(tb_lo[t], tb_hi[t]):
-            # merge_text_turn builds "".join(line + "\n")·rstrip() + "\n\n".
-            # With every line already rstripped (ends non-whitespace or
-            # empty), that equals "\n".join(lines).rstrip() + "\n\n": the
-            # outer rstrip can only eat the final newline run left by
-            # trailing empty lines, never reach into line content.
+        blocks = range(tb_lo[t], tb_hi[t])
+        if sort and blocks:
+            blocks = [blocks[i] for i in sort_order(
+                block_bbox[tb_lo[t]:tb_hi[t]], sort_tolerance)]
+        for b in blocks:
+            # The reference builds "".join(line + "\n")·rstrip() + "\n\n"
+            # per block. With every line already rstripped (ends
+            # non-whitespace or empty), that equals
+            # "\n".join(lines).rstrip() + "\n\n": the outer rstrip can
+            # only eat the final newline run left by trailing empty
+            # lines, never reach into line content.
             parts.append("\n".join(line_strs[line_lo[b]:line_hi[b]]).rstrip())
             parts.append("\n\n")
         text = "".join(parts)
@@ -239,110 +183,3 @@ def plain_text_batch(seg: Segmentation, sort: bool = False,
             text = text[:-1]
         out.append(text.strip())
     return out
-
-
-def _span_dict(seg: Segmentation, span_idx: int, keep_chars: bool,
-               override: Optional[dict] = None) -> dict:
-    """One span as an output dict (P2 + F8, extraction.py:83-90,112-123).
-
-    `override` carries link-split sub-span fields (start/end char offsets,
-    url, char idx range, bbox); split spans lose their script flags,
-    matching the reconstruction at pdf/links.py:203-219.
-    """
-    cb = seg.chars
-    if override is None:
-        a, b = int(seg.spans.start[span_idx]), int(seg.spans.end[span_idx])
-        bbox = seg.spans.bbox[span_idx]
-        url = ""
-        csi = int(seg.spans.char_start_idx[span_idx])
-        cei = int(seg.spans.char_end_idx[span_idx])
-        superscript = bool(seg.spans.superscript[span_idx])
-        subscript = bool(seg.spans.subscript[span_idx])
-    else:
-        a, b = override["start"], override["end"]
-        bbox = override["bbox"]
-        url = override["url"]
-        csi = int(cb.char_idx[a])
-        cei = int(cb.char_idx[b - 1])
-        superscript = False
-        subscript = False
-    # F8: handle_hyphens(postprocess_text(text), keep_hyphens=True)
-    # (extraction.py:85), pass-skipped via the prefix-sum flags
-    text = postprocess_range(seg, a, b)
-    if seg.hy_cum[b] - seg.hy_cum[a]:
-        text = text.replace("\x02", "-\n")
-    name, flags, size, weight = cb.fonts[int(cb.font[a])]
-    d = {
-        "bbox": [float(v) for v in bbox],
-        "text": text,
-        "font": {"name": name, "flags": flags, "size": size, "weight": weight},
-        "char_start_idx": csi,
-        "char_end_idx": cei,
-        "rotation": float(cb.rot[a]),
-        "url": url,
-        "superscript": superscript,
-        "subscript": subscript,
-    }
-    if keep_chars:
-        d["chars"] = [
-            {
-                "bbox": [float(v) for v in cb.boxes[i]],
-                "char": cb.gtext[i:i + 1],
-                "rotation": float(cb.rot[i]),
-                "font": d["font"],
-                "char_idx": int(cb.char_idx[i]),
-            }
-            for i in range(a, b)
-        ]
-    return d
-
-
-def struct_page(seg: Segmentation, turn: int, page_id: int,
-                keep_chars: bool = False, sort: bool = False,
-                span_splits: Optional[dict] = None,
-                sort_tolerance: float = 1.25) -> dict:
-    """One turn as a dictionary_output page (extraction.py:93-131).
-
-    `span_splits` maps span index -> list of override dicts (from the link
-    reconstruction, core/links.py). Rotation fix-up for 90/270 pages swaps
-    width/height and reorders the page bbox (extraction.py:128-130).
-    """
-    dt = seg.chars.turns[turn]
-    blocks_out = []
-    blo, bhi = int(seg.turn_block_lo[turn]), int(seg.turn_block_hi[turn])
-    for b in range(blo, bhi):
-        lines_out = []
-        for li in range(int(seg.blocks.line_lo[b]), int(seg.blocks.line_hi[b])):
-            spans_out = []
-            for si in range(int(seg.lines.start[li]), int(seg.lines.end[li])):
-                if span_splits and si in span_splits:
-                    for ov in span_splits[si]:
-                        spans_out.append(_span_dict(seg, si, keep_chars, ov))
-                else:
-                    spans_out.append(_span_dict(seg, si, keep_chars))
-            lines_out.append({
-                "spans": spans_out,
-                "bbox": [float(v) for v in seg.lines.bbox[li]],
-            })
-        blocks_out.append({
-            "lines": lines_out,
-            "bbox": [float(v) for v in seg.blocks.bbox[b]],
-        })
-    if sort and blocks_out:
-        order = sort_order([blk["bbox"] for blk in blocks_out],
-                           sort_tolerance)
-        blocks_out = [blocks_out[i] for i in order]
-    width, height = dt.page_width, dt.page_height
-    bbox = list(dt.page_bbox)
-    if dt.rotation in (90, 270):
-        width, height = height, width
-        bbox = [bbox[2], bbox[3], bbox[0], bbox[1]]
-    return {
-        "page": page_id,
-        "bbox": bbox,
-        "width": width,
-        "height": height,
-        "rotation": dt.rotation,
-        "blocks": blocks_out,
-        "refs": [],
-    }

@@ -108,6 +108,9 @@ def decode_turn(obj: dict, quote_loosebox: bool = True) -> DecodedTurn:
     # (pages.py:279-280, chars.py:14-15 — both reduce to the same values)
     page_w = math.ceil(abs(pb[2] - pb[0]))
     page_h = math.ceil(abs(pb[1] - pb[3]))
+    if not (_int32(page_w) and _int32(page_h)):
+        # the int32 width/height columns would wrap it silently
+        raise ValueError("page_bbox width/height exceed int32")
 
     text: str = obj.get("text", "")
     n = len(text)
@@ -127,11 +130,15 @@ def decode_turn(obj: dict, quote_loosebox: bool = True) -> DecodedTurn:
     fid = obj.get("font_id", 0)
     fonts = obj.get("fonts") or [{"name": "", "flags": 0, "size": 0.0, "weight": 0}]
     for f in fonts:
+        # keep malformed font tables failing HERE, inside the caller's
+        # per-turn error channel, not later in build_char_batch or in the
+        # Arrow font columns, where one bad turn would kill the whole batch
         if not isinstance(f, dict):
-            # keep malformed font tables failing HERE, inside the caller's
-            # per-turn error channel, not later in build_char_batch where
-            # one bad turn would kill the whole Arrow batch
             raise ValueError("fonts entries must be objects")
+        for key, fits in _FONT_FIELDS:
+            if f.get(key) is not None and not fits(f[key]):
+                raise ValueError(f"font {key} {f[key]!r} does not fit its "
+                                 "Arrow type")
     if not isinstance(fid, list):
         # scalar fast path: bounds-check the one value, skip the array scan
         fid = int(fid)
@@ -157,6 +164,21 @@ def decode_turn(obj: dict, quote_loosebox: bool = True) -> DecodedTurn:
             if not loose:
                 boxes[i] = tb
 
+    # links and table regions are read after segmentation (core/links.py,
+    # core/tables.py) and in the Arrow span/link_dests columns, all
+    # outside the per-turn error channel: check them here
+    links = obj.get("links") or []
+    for ln in links:
+        _check_link(ln)
+    tables = obj.get("tables") or []
+    img_size = obj.get("img_size")
+    if tables and img_size:  # read together, and only together
+        for tb in tables:
+            _floats(tb, 4, "tables entries")
+        if not (isinstance(img_size, list) and len(img_size) >= 2
+                and all(isinstance(v, (int, float)) for v in img_size[:2])):
+            raise ValueError("img_size must hold 2 numbers")
+
     boxes = normalize_boxes(boxes)
     boxes = rotate_boxes(boxes, page_w, page_h, rotation)
 
@@ -173,10 +195,57 @@ def decode_turn(obj: dict, quote_loosebox: bool = True) -> DecodedTurn:
         # font_tuple(), whose .get() normalization makes the old
         # key-projection copy redundant
         fonts=fonts,
-        links=obj.get("links") or [],
-        tables=obj.get("tables") or [],
-        img_size=obj.get("img_size"),
+        links=links,
+        tables=tables,
+        img_size=img_size,
     )
+
+
+def _int32(v, coerce: bool = False) -> bool:
+    """Whether v fits an int32 Arrow column: pa.array takes a non-bool
+    number whose truncation fits; with coerce, whatever int() takes, as
+    core/links.py registers int(dest_page)."""
+    if not coerce and (isinstance(v, bool) or not isinstance(v, (int, float))):
+        return False
+    try:
+        return -2**31 <= int(v) < 2**31
+    except (TypeError, ValueError, OverflowError):  # also nan, inf
+        return False
+
+
+# what pa.array takes for each non-null FONT_PA field (core/arrow_out.py)
+_FONT_FIELDS = (
+    ("name", lambda v: isinstance(v, str)),
+    ("flags", _int32),
+    ("size", lambda v: isinstance(v, float)
+     or (isinstance(v, int) and -2**63 <= v < 2**63)),
+    ("weight", _int32),
+)
+
+
+def _floats(v, n: int, what: str, exact: bool = True) -> None:
+    """Raise unless float() takes v[0] .. v[n-1], as core/links.py and
+    core/tables.py read these fields, and v holds exactly n when exact."""
+    try:
+        if exact and len(v) != n:
+            raise ValueError
+        for i in range(n):
+            float(v[i])
+    except (TypeError, ValueError, LookupError, OverflowError):
+        raise ValueError(f"{what} must hold {n} numbers") from None
+
+
+def _check_link(ln) -> None:
+    if not isinstance(ln, dict):
+        raise ValueError("links entries must be objects")
+    _floats(ln.get("bbox"), 4, "link bbox")
+    if ln.get("dest_pos") is not None:
+        _floats(ln["dest_pos"], 2, "link dest_pos", exact=False)
+    dest_page = ln.get("dest_page")
+    if dest_page is not None and not _int32(dest_page, coerce=True):
+        raise ValueError("link dest_page must be an integer within int32")
+    if not isinstance(ln.get("url", ""), (str, type(None))):
+        raise ValueError("link url must be a string")
 
 
 def prose_to_payload(text: str, page_width: float = 612.0, page_height: float = 792.0,

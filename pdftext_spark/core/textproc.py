@@ -185,27 +185,6 @@ def handle_hyphens(text: str, keep_hyphens: bool = False) -> str:
     return "".join(pieces)
 
 
-def merge_line_text(span_texts: list[str]) -> str:
-    """Per-line assembly inside merge_text (postprocessing.py:104-107)."""
-    return postprocess_text("".join(span_texts)).rstrip() + "\n"
-
-
-def finish_block_text(line_texts: list[str]) -> str:
-    """Per-block assembly (postprocessing.py:109-110)."""
-    return "".join(line_texts).rstrip() + "\n\n"
-
-
-def finish_page_text(block_texts: list[str], hyphens: bool) -> str:
-    """Page-level hyphen handling (postprocessing.py:112)."""
-    return handle_hyphens("".join(block_texts), keep_hyphens=hyphens)
-
-
-def span_output_text(text: str) -> str:
-    """F8 — dictionary-output span text always keeps hyphens
-    (extraction.py:85)."""
-    return handle_hyphens(postprocess_text(text), keep_hyphens=True)
-
-
 def is_math_symbol(ch: str) -> bool:
     """Unicode Sm check (pages.py:15-20)."""
     return len(ch) == 1 and unicodedata.category(ch) == "Sm"

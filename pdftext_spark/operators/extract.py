@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from pdftext_spark.config import ExtractConfig
-from pdftext_spark.operators.refs import DEFAULT_BROADCAST_THRESHOLD, resolve_refs
+from pdftext_spark.operators.refs import resolve_refs
 from pdftext_spark.operators.schema import EXTRACTED
 
 # Shuffle exchanges only — BroadcastExchange does NOT repartition the
@@ -111,9 +111,7 @@ def _apply_salt(transcripts: DataFrame, cfg: ExtractConfig, spark) -> DataFrame:
 
 
 def extract(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig(),
-            resolve_links: bool = True,
-            broadcast_threshold: int | None = DEFAULT_BROADCAST_THRESHOLD,
-            ) -> DataFrame:
+            resolve_links: bool = True) -> DataFrame:
     """Run the extraction kernel over a transcript table.
 
     Input columns: (conv_id, turn_idx, role, text, tool, ts) — the
@@ -124,14 +122,9 @@ def extract(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig(),
     aggregates the tiny cached link_dests column (the columnar cache
     prunes the heavy page column from that scan) and the rewrite joins
     back against the same cache, so no payload is ever decoded twice.
-
-    broadcast_threshold passes through to refs.resolve_refs: the default
-    gate counts link registrations EAGERLY at call time (one Spark job
-    that also materializes the kernel cache the first consumer would have
-    paid for anyway). Pass None for a fully lazy plan with
-    unconditionally hinted broadcasts — appropriate when composing plans
-    for explain()/inspection or when the corpus is known not to be
-    link-dense."""
+    The refs broadcast gate counts link registrations EAGERLY at call
+    time (one Spark job that also materializes the kernel cache the
+    first consumer would have paid for anyway)."""
     def emit(batch, rb, target):
         from pdftext_spark.core.arrow_out import assemble_record_batch
         return assemble_record_batch(batch, rb, cfg, target)
@@ -139,8 +132,7 @@ def extract(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig(),
     out = _kernel(transcripts, ("conv_id", "turn_idx", "role", "text", "ts"),
                   cfg, EXTRACTED, emit)
     if resolve_links and not cfg.disable_links:
-        out = resolve_refs(out, persist=True,
-                           broadcast_threshold=broadcast_threshold)
+        out = resolve_refs(out, persist=True)
     return out
 
 

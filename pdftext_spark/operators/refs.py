@@ -20,7 +20,7 @@ to broadcast — but on link-dense corpora the per-turn url-map table is
 O(linked turns) and a hard-forced broadcast would OOM the driver instead
 of degrading. `resolve_refs` therefore counts the registrations (a
 column-pruned scan of the tiny `link_dests` column) and drops the
-`F.broadcast` hints above `broadcast_threshold`, letting AQE pick a
+`F.broadcast` hints above `BROADCAST_THRESHOLD`, letting AQE pick a
 broadcast or sort-merge join on (conv_id, turn_idx) at runtime. On the
 fallback path the two side tables are pre-merged into ONE per-(conv,
 turn) table so the heavy nested page column meets exactly one join; the
@@ -83,12 +83,10 @@ def _span_with_url(s: Column, url_map: Column) -> Column:
 # being "obviously driver-safe" (rule of thumb: ~100 bytes/row -> ~500 MB
 # at 5e6, within spark.sql.autoBroadcastJoinThreshold territory but not a
 # forced-broadcast bet). AQE decides from real runtime sizes beyond it.
-DEFAULT_BROADCAST_THRESHOLD = 5_000_000
+BROADCAST_THRESHOLD = 5_000_000
 
 
-def resolve_refs(extracted: DataFrame, persist: bool = True,
-                 broadcast_threshold: int | None = DEFAULT_BROADCAST_THRESHOLD,
-                 ) -> DataFrame:
+def resolve_refs(extracted: DataFrame, persist: bool = True) -> DataFrame:
     # The registry is aggregated from `extracted`'s own link_dests column.
     # persist=True caches `extracted` so the kernel runs once for the
     # registry build, the size gate and the rewrite (extract(), tests,
@@ -123,14 +121,10 @@ def resolve_refs(extracted: DataFrame, persist: bool = True,
     # registration count is a column-pruned scan of the tiny link_dests
     # column — cheap against the already-persisted/staged `extracted`
     # (measured ~0.2 s on the 110k-turn tier, interleaved best-of-5).
-    do_broadcast = True
-    if broadcast_threshold is not None:
-        n_regs = (extracted.select(F.coalesce(F.size("link_dests"), F.lit(0))
-                                   .alias("n"))
-                  .agg(F.sum("n")).collect()[0][0] or 0)
-        do_broadcast = n_regs <= broadcast_threshold
-
-    if do_broadcast:
+    n_regs = (extracted.select(F.coalesce(F.size("link_dests"), F.lit(0))
+                               .alias("n"))
+              .agg(F.sum("n")).collect()[0][0] or 0)
+    if n_regs <= BROADCAST_THRESHOLD:
         # hot path: two independent broadcast builds, zero data shuffles
         # (measured faster than pre-merging them into one side table —
         # the full_outer merge serializes the two agg pipelines behind a

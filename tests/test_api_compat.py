@@ -1,6 +1,7 @@
 """Reference-shaped entry points + CLI (SURVEY.md §3 surface parity)."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -72,6 +73,9 @@ def test_parse_range_str():
     assert parse_range_str("3,1,1") == [1, 3]
 
 
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def test_cli_smoke(fixture_rows, tmp_path):
     payloads = _conv_payloads(fixture_rows)
     src = tmp_path / "conv.jsonl"
@@ -79,16 +83,44 @@ def test_cli_smoke(fixture_rows, tmp_path):
         json.dumps({"turn_idx": i, "text": p}) for i, p in enumerate(payloads)))
     out = subprocess.run(
         [sys.executable, "scripts/extract_cli.py", str(src), "--pages", "0-1"],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=_REPO_ROOT)
     assert out.returncode == 0, out.stderr[-500:]
     expected = "\n".join(oracle_plain(payloads[:2]))
     assert out.stdout.rstrip("\n") == expected.rstrip("\n")
-    # JSON mode round-trips
+    # JSON mode round-trips, keys in the reference's order
     out2 = subprocess.run(
         [sys.executable, "scripts/extract_cli.py", str(src), "--json"],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=_REPO_ROOT)
     pages = json.loads(out2.stdout)
     assert len(pages) == len(payloads)
+    span_keys = ["bbox", "text", "font", "char_start_idx", "char_end_idx",
+                 "rotation", "url", "superscript", "subscript"]
+    _assert_key_order(pages, span_keys)
+    # the CLI has no keep_chars flag: char dicts through the same API
+    pages = json.loads(json.dumps(dictionary_output(payloads, keep_chars=True)))
+    _assert_key_order(pages, span_keys + ["chars"])
+    chars = [c for p in pages for b in p["blocks"] for ln in b["lines"]
+             for sp in ln["spans"] for c in sp["chars"]]
+    assert chars
+    for c in chars:
+        assert list(c) == ["bbox", "char", "rotation", "font", "char_idx"]
+
+
+def _assert_key_order(pages, span_keys):
+    n_spans = 0
+    for p in pages:
+        assert list(p) == ["page", "bbox", "width", "height", "rotation",
+                           "blocks", "refs"]
+        for b in p["blocks"]:
+            assert list(b) == ["lines", "bbox"]
+            for ln in b["lines"]:
+                assert list(ln) == ["spans", "bbox"]
+                for sp in ln["spans"]:
+                    assert list(sp) == span_keys
+                    assert list(sp["font"]) == ["name", "flags", "size",
+                                                "weight"]
+                    n_spans += 1
+    assert n_spans
 
 
 def test_bbox_public_api():

@@ -267,33 +267,37 @@ def _arrow_rows(texts, cfg):
 @given(texts=st.lists(_payload_st, min_size=1, max_size=4),
        keep_chars=st.booleans(), sort=st.booleans())
 @settings(**SETTINGS)
-def test_arrow_path_equals_dict_path(texts, keep_chars, sort):
-    """The columnar Arrow assembly must be value-identical to the dict
-    kernel for every flag combination, including link splits and
-    keep_chars char gathers, on adversarial payloads."""
+def test_arrow_path_equals_oracle(texts, keep_chars, sort):
+    """The Spark kernel's own code (route_batch + assemble_record_batch)
+    must match the naive oracle for every flag combination, including
+    link splits and keep_chars char gathers, on adversarial payloads.
+    Links are resolved in-process from the link_dests column, and char
+    fonts dropped, as test_core_parity does for process_batch."""
     cfg = ExtractConfig(keep_chars=keep_chars, sort=sort)
     rows = _arrow_rows(texts, cfg)
-    outs = process_batch(texts, ["user"] * len(texts),
-                         list(range(len(texts))), cfg)
-    assert len(rows) == len(outs)
-    for row, o in zip(rows, outs):
-        assert row["text"] == o.text
-        assert row["n_chars"] == o.n_chars
-        assert row["n_spans"] == o.n_spans
-        dests = [{"ord": r[0], "gid": r[1], "dest_page": r[2],
-                  "x": r[3], "y": r[4]} for r in o.registrations]
-        assert deep_eq(row["link_dests"], dests) is None
-        exp_page = o.page
-        if exp_page is not None:
-            for blk in exp_page["blocks"]:
-                for ln in blk["lines"]:
-                    for sp in ln["spans"]:
-                        if keep_chars:
-                            for c in sp.get("chars", []):
-                                c.pop("font", None)
-                        else:
-                            sp.setdefault("chars", None)
-        r = deep_eq(row["page"], exp_page)
+    ids = list(range(len(texts)))
+    regs = [(ids[i], d["ord"], d["gid"], d["dest_page"], d["x"], d["y"])
+            for i, row in enumerate(rows) for d in row["link_dests"]]
+    url_map, refs_by_page = resolve_conversation_refs(regs)
+    exp_plain = oracle_plain(texts, sort=sort, page_ids=ids)
+    exp_pages = oracle_dictionary(texts, sort=sort, keep_chars=keep_chars,
+                                  page_ids=ids)
+    assert len(rows) == len(exp_pages)
+    for row, ep, eg in zip(rows, exp_plain, exp_pages):
+        assert row["error"] is None, row["error"]
+        assert row["text"] == ep
+        assert row["n_blocks"] == len(eg["blocks"])
+        page = row["page"]
+        rewrite_page_urls(page, url_map, refs_by_page)
+        for blk in eg["blocks"]:
+            for ln in blk["lines"]:
+                for sp in ln["spans"]:
+                    if keep_chars:
+                        for c in sp["chars"]:
+                            c.pop("font", None)
+                    else:
+                        sp["chars"] = None
+        r = deep_eq(page, eg)
         assert r is None, r
 
 

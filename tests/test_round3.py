@@ -13,6 +13,11 @@ def _n_persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def _persistent_rdd_ids(spark) -> set:
+    return {int(k) for k in
+            spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
 def test_min_label_components_long_path(spark):
     """A 300-node path graph has eccentricity 299: one-hop-only min-label
     propagation could NOT converge in 64 rounds. Pointer doubling must
@@ -122,20 +127,25 @@ def test_unpersist_tier_releases_extract_cache(spark):
     # normalize: earlier test modules may have populated the caches
     unpersist_tier(spark, None)
     unpersist_registered()
-    base = _n_persistent_rdds(spark)
+    # compare id sets, not counts: RDDs other tests persisted may be
+    # released while this test runs
+    before = _persistent_rdd_ids(spark)
     # q_extract_spans rides the shared _extracted_df kernel cache
     # (q_extract_plain runs its own variants pass since round 5)
     q_extract_spans(spark, SF).count()
-    assert _n_persistent_rdds(spark) > base
+    created = _persistent_rdd_ids(spark) - before
+    assert created
     key_count = len(_EXTRACT_CACHE)
     released = unpersist_tier(spark, SF)
     assert released >= 1
     assert len(_EXTRACT_CACHE) == key_count - 1
-    assert _n_persistent_rdds(spark) == base
+    assert not created & _persistent_rdd_ids(spark)
     # the query still works after eviction (re-extracts, fresh cache entry)
     assert q_extract_spans(spark, SF).count() > 0
+    created = _persistent_rdd_ids(spark) - before
+    assert created
     unpersist_tier(spark, None)
-    assert _n_persistent_rdds(spark) == base
+    assert not created & _persistent_rdd_ids(spark)
 
 
 def test_release_persisted_frees_kernel_cache(spark):
@@ -243,32 +253,75 @@ def test_html_parser_review_regressions():
 
 
 def test_malformed_payload_isolated_per_turn():
-    """A parseable payload with wrong-length charrot or out-of-range
-    font_id must error ONLY its own turn — not kill the Arrow batch
-    (round-3 core review: the old crash surfaced in segment_batch,
-    outside the per-turn error channel)."""
+    """A parseable payload with one malformed field must error ONLY its
+    own turn — not kill the Arrow batch (round-3 core review: the old
+    crash surfaced in segment_batch, outside the per-turn error channel).
+    Links and tables are read after segmentation and the font/url values
+    land in typed Arrow columns, so every case also runs through
+    route_batch + assemble_record_batch, the Spark kernel's own code."""
     import json
 
     from pdftext_spark.config import ExtractConfig
     from pdftext_spark.core.api import process_batch
     from pdftext_spark.core.payload import payload_json, prose_to_payload
+    from tests.test_property import _arrow_rows
 
     good = payload_json(prose_to_payload("hello world"))
-    bad_font = json.dumps({
+    base = {
         "kind": "chars", "page_bbox": [0, 0, 612, 792], "rotation": 0,
         "text": "ab", "bbox": [1, 1, 2, 2, 2, 1, 3, 2], "charrot": 0.0,
         "fonts": [{"name": "A", "flags": 0, "size": 1.0, "weight": 1}],
-        "font_id": [0, 5]})
-    bad_rot = json.dumps({
-        "kind": "chars", "page_bbox": [0, 0, 612, 792], "rotation": 0,
-        "text": "ab", "bbox": [1, 1, 2, 2, 2, 1, 3, 2], "charrot": [0.0],
-        "fonts": [{"name": "A", "flags": 0, "size": 1.0, "weight": 1}],
-        "font_id": 0})
-    outs = process_batch([good, bad_font, bad_rot], ["user"] * 3,
-                         [0, 1, 2], ExtractConfig())
-    assert outs[0].text == "hello world"
-    assert outs[1].error and "font_id" in outs[1].error
-    assert outs[2].error and "charrot" in outs[2].error
+        "font_id": 0,
+        # the link overlaps both chars and the table covers the page, so
+        # every field below is read by the links/tables code
+        "links": [{"bbox": [0, 0, 4, 4], "dest_page": None,
+                   "dest_pos": None, "url": "https://x.example/"}],
+        "tables": [[0, 0, 612, 792]], "img_size": [612, 792]}
+
+    def with_font(**kw):
+        return dict(base, fonts=[dict(base["fonts"][0], **kw)])
+
+    def with_link(**kw):
+        return dict(base, links=[dict(base["links"][0], **kw)])
+
+    bad = [
+        (dict(base, font_id=[0, 5]), "font_id"),
+        (dict(base, charrot=[0.0]), "charrot"),
+        (with_link(bbox=[0, 0, 4]), "link bbox"),
+        (with_link(dest_pos=[5]), "link dest_pos"),
+        (with_link(dest_page="x"), "link dest_page"),
+        (with_link(dest_page=2**31), "link dest_page"),
+        (dict(base, links=base["links"][0]), "links entries"),
+        (dict(base, tables=[[0, 0, 612]]), "tables entries"),
+        (dict(base, img_size=[612]), "img_size"),
+        (with_font(name=7), "font name"),
+        (with_font(flags="4"), "font flags"),
+        (with_font(weight=True), "font weight"),
+        (with_font(size="big"), "font size"),
+        (with_link(url=5), "link url"),
+        (dict(base, page_bbox=[0, 0, 1e10, 792]), "page_bbox"),
+    ]
+    # edge values both paths took before these checks: still no error
+    ok = [
+        base,
+        with_link(url=None),
+        with_link(dest_page=0, dest_pos=[1, 2, 3]),
+        with_font(flags=4.0, size=11, weight=None),
+        with_font(name=None),
+        dict(base, img_size=[612, 792, 1]),
+    ]
+    texts = ([good] + [json.dumps(p) for p, _ in bad]
+             + [json.dumps(p) for p in ok])
+    n = len(texts)
+    outs = process_batch(texts, ["user"] * n, list(range(n)), ExtractConfig())
+    rows = _arrow_rows(texts, ExtractConfig())
+    assert outs[0].text == rows[0]["text"] == "hello world"
+    for k, (_, field) in enumerate(bad, start=1):
+        assert outs[k].error and field in outs[k].error, (field, outs[k].error)
+        assert rows[k]["error"] == outs[k].error
+    for k in range(1 + len(bad), n):
+        assert outs[k].error is None and rows[k]["error"] is None, k
+        assert outs[k].text == rows[k]["text"] == "ab"
 
 
 def test_word_dedup_fstring_collision_quirk():

@@ -161,15 +161,17 @@ def test_no_heavy_shuffle_after_kernel(spark, transcripts):
     assert len(exchanges) >= 1
 
 
-def test_refs_broadcast_fallback_parity(spark, transcripts):
-    """broadcast_threshold=0 forces the no-hint (AQE / sort-merge) path on
-    link-dense corpora; output must be byte-identical to the broadcast
-    path, and the hint must actually be present/absent in the plan."""
-    from pdftext_spark.operators.refs import resolve_refs
+def test_refs_broadcast_fallback_parity(spark, transcripts, monkeypatch):
+    """A zero BROADCAST_THRESHOLD forces the no-hint (AQE / sort-merge)
+    path of link-dense corpora; output must be byte-identical to the
+    broadcast path, and the hint must actually be present/absent in the
+    plan."""
+    from pdftext_spark.operators import refs
     ext = extract(transcripts, ExtractConfig(), resolve_links=False).persist()
     try:
-        df_b = resolve_refs(ext, persist=False)
-        df_f = resolve_refs(ext, persist=False, broadcast_threshold=0)
+        df_b = refs.resolve_refs(ext, persist=False)
+        monkeypatch.setattr(refs, "BROADCAST_THRESHOLD", 0)
+        df_f = refs.resolve_refs(ext, persist=False)
         assert "strategy=broadcast" in df_b._jdf.queryExecution().analyzed().toString()
         assert "strategy=broadcast" not in df_f._jdf.queryExecution().analyzed().toString()
         a = df_b.orderBy("conv_id", "turn_idx").collect()
