@@ -99,10 +99,13 @@ def _arrow_text_view(texts):
         offs = np.frombuffer(bufs[1], dtype=odtype, count=len(texts) + 1,
                              offset=texts.offset * owidth)
     data = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
+    valid = None
     if texts.null_count:
-        valid = ~texts.is_null().to_numpy(zero_copy_only=False)
-    else:
-        valid = None
+        # the validity bitmap, bit i = row i: is_null().to_numpy() would
+        # import pandas into the worker
+        valid = np.unpackbits(np.frombuffer(bufs[0], dtype=np.uint8),
+                              count=texts.offset + len(texts),
+                              bitorder="little")[texts.offset:].view(bool)
 
     def raw_at(i):
         if valid is not None and not valid[i]:

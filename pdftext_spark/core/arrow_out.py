@@ -2,7 +2,11 @@
 
 Builds the nested `page` column (blocks→lines→spans) DIRECTLY from
 segmentation offsets as Arrow ListArray/StructArray — no per-span Python
-dicts and no pandas→Arrow conversion. `build_page_array` is the only
+dicts and no `pa.array`, which would import pandas into the worker:
+every leaf column is built from its buffers (core/arrow_buffers.py,
+`pa.nulls`) and gathered by `pc.take` with Arrow indices, and the
+`tables` and `link_dests` columns from flat child arrays plus offsets.
+`build_page_array` is the only
 page assembler: the Spark kernel (`mapInArrow`, keep_chars included)
 emits its rows as they are, and `core.api.process_batch` (local library
 use and tests) converts them to page dicts.
@@ -22,6 +26,7 @@ import pyarrow.compute as pc
 
 from pdftext_spark.config import ExtractConfig
 from pdftext_spark.core.api import RoutedBatch
+from pdftext_spark.core.arrow_buffers import from_numpy, string_array
 from pdftext_spark.core.assemble import postprocess_ranges, sort_order
 
 CHAR_PA = pa.struct([
@@ -85,16 +90,40 @@ LINK_DEST_PA = pa.list_(pa.struct([
 ]))
 
 
-def _bbox_list(flat: np.ndarray) -> pa.ListArray:
-    n = len(flat)
-    offsets = pa.array(np.arange(0, 4 * n + 1, 4, dtype=np.int32))
-    return pa.ListArray.from_arrays(offsets, pa.array(flat.ravel(), type=pa.float64()))
-
-
 def _offsets(counts: np.ndarray) -> pa.Array:
     off = np.zeros(len(counts) + 1, dtype=np.int32)
     np.cumsum(counts, out=off[1:])
-    return pa.array(off)
+    return from_numpy(off)
+
+
+def _bbox_list(flat: np.ndarray) -> pa.ListArray:
+    n = len(flat)
+    offsets = from_numpy(np.arange(0, 4 * n + 1, 4, dtype=np.int32))
+    values = np.asarray(flat, dtype=np.float64).ravel()
+    return pa.ListArray.from_arrays(offsets, from_numpy(values))
+
+
+def _font_array(fonts: list, codes: np.ndarray) -> pa.StructArray:
+    """FONT_PA rows for the global font codes `codes`. The font table
+    holds raw payload values (None where a key is missing), range- and
+    type-checked by core/payload.py:_FONT_FIELDS."""
+    # a batch of empty turns has an empty font table
+    names, flags, sizes, weights = zip(*fonts) if fonts else [()] * 4
+
+    def column(vals, conv, dtype):
+        valid = np.fromiter((v is not None for v in vals), bool, len(vals))
+        out = np.fromiter((0 if v is None else conv(v) for v in vals),
+                          dtype, len(vals))
+        return from_numpy(out, valid)
+
+    idx = from_numpy(np.asarray(codes, dtype=np.int32))
+    return pa.StructArray.from_arrays([
+        pc.take(string_array(names), idx),
+        pc.take(column(flags, int, np.int32), idx),
+        # float(v): a Python int past 2**53 rounds, where pa.array raised
+        pc.take(column(sizes, float, np.float64), idx),
+        pc.take(column(weights, int, np.int32), idx),
+    ], fields=list(FONT_PA))
 
 
 def build_page_array(rb: RoutedBatch, cfg: ExtractConfig) -> pa.StructArray:
@@ -191,17 +220,7 @@ def build_page_array(rb: RoutedBatch, cfg: ExtractConfig) -> pa.StructArray:
         block_bbox = blocks.bbox
 
     # ---- arrow assembly, bottom-up ----
-    fonts = cb.fonts
-    fname = pc.take(pa.array([f[0] for f in fonts], type=pa.string()),
-                    pa.array(font_out))
-    fflags = pc.take(pa.array([f[1] for f in fonts], type=pa.int32()),
-                     pa.array(font_out))
-    fsize = pc.take(pa.array([f[2] for f in fonts], type=pa.float64()),
-                    pa.array(font_out))
-    fweight = pc.take(pa.array([f[3] for f in fonts], type=pa.int32()),
-                      pa.array(font_out))
-    font_arr = pa.StructArray.from_arrays([fname, fflags, fsize, fweight],
-                                          fields=list(FONT_PA))
+    font_arr = _font_array(cb.fonts, font_out)
 
     # per-span char lists (keep_chars) straight from the [start, end) char
     # ranges — same gather trick as everything else, no per-char dicts.
@@ -227,12 +246,12 @@ def build_page_array(rb: RoutedBatch, cfg: ExtractConfig) -> pa.StructArray:
         char_pool = pa.StringArray.from_buffers(
             len(cps), pa.py_buffer(boffs.tobytes()),
             pa.py_buffer(cb.gtext.encode("utf-8")))
-        char_vals = pc.take(char_pool, pa.array(flat))
+        char_vals = pc.take(char_pool, from_numpy(flat))
         char_arr = pa.StructArray.from_arrays([
             _bbox_list(cb.boxes[flat]),
             char_vals,
-            pa.array(cb.rot[flat], type=pa.float64()),
-            pa.array(cb.char_idx[flat].astype(np.int32, copy=False)),
+            from_numpy(cb.rot[flat]),
+            from_numpy(cb.char_idx[flat].astype(np.int32, copy=False)),
         ], fields=list(CHAR_PA))
         chars_col = pa.ListArray.from_arrays(_offsets(lens), char_arr)
     else:
@@ -240,14 +259,14 @@ def build_page_array(rb: RoutedBatch, cfg: ExtractConfig) -> pa.StructArray:
 
     span_arr = pa.StructArray.from_arrays([
         _bbox_list(bbox_out),
-        pa.array(texts, type=pa.string()),
+        string_array(texts),
         font_arr,
-        pa.array(csi_out, type=pa.int32()),
-        pa.array(cei_out, type=pa.int32()),
-        pa.array(rot_out, type=pa.float64()),
-        pa.array(urls, type=pa.string()),
-        pa.array(sup_out),
-        pa.array(sub_out),
+        from_numpy(csi_out),
+        from_numpy(cei_out),
+        from_numpy(rot_out),
+        string_array(urls),
+        from_numpy(sup_out),
+        from_numpy(sub_out),
         chars_col,
     ], fields=list(SPAN_PA))
 
@@ -277,18 +296,62 @@ def build_page_array(rb: RoutedBatch, cfg: ExtractConfig) -> pa.StructArray:
         pbbox[t] = bb
 
     refs_arr = pa.ListArray.from_arrays(
-        pa.array(np.zeros(T + 1, dtype=np.int32)),
-        pa.array([], type=REF_PA))
+        _offsets(np.zeros(T, dtype=np.int32)), pa.nulls(0, type=REF_PA))
 
     return pa.StructArray.from_arrays([
-        pa.array(np.asarray(rb.page_ids, dtype=np.int32)),
+        from_numpy(np.asarray(rb.page_ids, dtype=np.int32)),
         _bbox_list(pbbox),
-        pa.array(widths),
-        pa.array(heights),
-        pa.array(rotations),
+        from_numpy(widths),
+        from_numpy(heights),
+        from_numpy(rotations),
         blocks_list,
         refs_arr,
     ], fields=list(PAGE_PA))
+
+
+def _tables_array(n: int, doc_pos: list, tables_by_local: dict) -> pa.Array:
+    """TABLES_PA rows: each doc turn's tables (lists of {"text", "bbox"}
+    cells, core/tables.py) at its row, flattened into cell columns plus
+    table and row offsets; other rows get []."""
+    n_tables = np.zeros(n, dtype=np.int64)
+    n_cells: list = []
+    texts: list = []
+    boxes: list = []
+    for local in sorted(tables_by_local):
+        tables = tables_by_local[local]
+        n_tables[doc_pos[local]] = len(tables)
+        for cells in tables:
+            n_cells.append(len(cells))
+            for c in cells:
+                texts.append(c["text"])
+                boxes.append(c["bbox"])
+    cell_arr = pa.StructArray.from_arrays(
+        [string_array(texts),
+         _bbox_list(np.asarray(boxes, dtype=np.float64).reshape(-1, 4))],
+        fields=list(TABLES_PA.value_type.value_type))
+    table_arr = pa.ListArray.from_arrays(
+        _offsets(np.asarray(n_cells, dtype=np.int64)), cell_arr)
+    return pa.ListArray.from_arrays(_offsets(n_tables), table_arr)
+
+
+def _link_dests_array(n: int, doc_pos: list, regs_by_local: dict) -> pa.Array:
+    """LINK_DEST_PA rows: each doc turn's registrations, (ord, gid,
+    dest_page, x, y) tuples (core/links.py), at its row, flattened into
+    columns plus row offsets; other rows get []."""
+    n_regs = np.zeros(n, dtype=np.int64)
+    regs: list = []
+    for local in sorted(regs_by_local):
+        n_regs[doc_pos[local]] = len(regs_by_local[local])
+        regs.extend(regs_by_local[local])
+    cols = list(zip(*regs)) if regs else [()] * 5
+    # dest_page is int32-checked at decode (core/payload.py:_check_link);
+    # x, y are floats of the scaled dest_pos (core/links.py)
+    dtypes = (np.int32, np.int32, np.int32, np.float64, np.float64)
+    dest_arr = pa.StructArray.from_arrays(
+        [from_numpy(np.fromiter(c, dt, len(regs)))
+         for c, dt in zip(cols, dtypes)],
+        fields=list(LINK_DEST_PA.value_type))
+    return pa.ListArray.from_arrays(_offsets(n_regs), dest_arr)
 
 
 def assemble_record_batch(batch: pa.RecordBatch, rb: RoutedBatch,
@@ -305,31 +368,24 @@ def assemble_record_batch(batch: pa.RecordBatch, rb: RoutedBatch,
     n_chars = np.zeros(n, dtype=np.int32)
     n_spans = np.zeros(n, dtype=np.int32)
     n_blocks_row = np.zeros(n, dtype=np.int32)
-    tables_rows: list = [[] for _ in range(n)]
-    dests_rows: list = [[] for _ in range(n)]
     for i, o in enumerate(rb.outputs):
         if o is not None:
             text_rows[i] = o.text
             is_html[i] = o.is_html
             errors[i] = o.error
+    doc_pos = np.asarray(rb.doc_pos, dtype=np.int64)
     for local, i in enumerate(rb.doc_pos):
         text_rows[i] = rb.plains[local]
-        n_chars[i] = rb.char_counts[local]
-        n_spans[i] = rb.span_counts[local]
-        n_blocks_row[i] = (rb.seg.turn_block_hi[local]
-                           - rb.seg.turn_block_lo[local])
-        if local in rb.tables_by_local:
-            tables_rows[i] = rb.tables_by_local[local]
-        if local in rb.regs_by_local:
-            dests_rows[i] = [
-                {"ord": r[0], "gid": r[1], "dest_page": r[2], "x": r[3], "y": r[4]}
-                for r in rb.regs_by_local[local]]
+    if T:
+        n_chars[doc_pos] = rb.char_counts
+        n_spans[doc_pos] = rb.span_counts
+        n_blocks_row[doc_pos] = rb.seg.turn_block_hi - rb.seg.turn_block_lo
 
     if cfg.emit_struct and T:
         doc_pages = build_page_array(rb, cfg)
         idx = np.full(n, -1, dtype=np.int64)
-        idx[np.asarray(rb.doc_pos, dtype=np.int64)] = np.arange(T)
-        page_col = pc.take(doc_pages, pa.array(idx, mask=idx < 0))
+        idx[doc_pos] = np.arange(T)
+        page_col = pc.take(doc_pages, from_numpy(idx, valid=idx >= 0))
     else:
         page_col = pa.nulls(n, type=PAGE_PA)
 
@@ -341,14 +397,14 @@ def assemble_record_batch(batch: pa.RecordBatch, rb: RoutedBatch,
         col("turn_idx"),
         col("role"),
         col("ts"),
-        pa.array(text_rows, type=pa.string()),
-        pa.array(is_html),
+        string_array(text_rows),
+        from_numpy(is_html),
         page_col,
-        pa.array(tables_rows, type=TABLES_PA),
-        pa.array(dests_rows, type=LINK_DEST_PA),
-        pa.array(errors, type=pa.string()),
-        pa.array(n_chars),
-        pa.array(n_spans),
-        pa.array(n_blocks_row),
+        _tables_array(n, rb.doc_pos, rb.tables_by_local),
+        _link_dests_array(n, rb.doc_pos, rb.regs_by_local),
+        string_array(errors),
+        from_numpy(n_chars),
+        from_numpy(n_spans),
+        from_numpy(n_blocks_row),
     ]
     return pa.RecordBatch.from_arrays(arrays, schema=target_schema)

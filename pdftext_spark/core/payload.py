@@ -92,8 +92,12 @@ def maybe_parse_payload_raw(raw) -> Optional[dict]:
         if isinstance(obj, dict) and obj.get("kind") == "chars":
             # ...and a "\ud800" escape decodes to one as well (orjson
             # rejects it): a strict re-encode raises UnicodeEncodeError
-            # here, inside the caller's per-turn error channel
-            json.dumps(obj, ensure_ascii=False).encode("utf-8")
+            # here, inside the caller's per-turn error channel. So do
+            # NaN, Infinity and 1e400 (-> inf), which orjson rejects too:
+            # allow_nan=False raises ValueError instead of letting them
+            # reach the boxes
+            json.dumps(obj, ensure_ascii=False,
+                       allow_nan=False).encode("utf-8")
             return obj
         return None
     if isinstance(obj, dict) and obj.get("kind") == "chars":
@@ -160,6 +164,8 @@ def decode_turn(obj: dict, quote_loosebox: bool = True) -> DecodedTurn:
     if tbox:
         for k, tb in tbox.items():
             i = int(k)
+            if not 0 <= i < n:  # "-1" would index the last char's box
+                raise ValueError(f"tbox key {k!r} out of range [0, {n})")
             loose = (charrot[i] == 0) and (text[i] != "'" or quote_loosebox)
             if not loose:
                 boxes[i] = tb
@@ -202,9 +208,11 @@ def decode_turn(obj: dict, quote_loosebox: bool = True) -> DecodedTurn:
 
 
 def _int32(v, coerce: bool = False) -> bool:
-    """Whether v fits an int32 Arrow column: pa.array takes a non-bool
-    number whose truncation fits; with coerce, whatever int() takes, as
-    core/links.py registers int(dest_page)."""
+    """Whether int(v) fits an int32 column: a non-bool number whose
+    truncation fits; with coerce, whatever int() takes, as core/links.py
+    registers int(dest_page). core/arrow_out.py builds the int32 columns
+    from numpy buffers, and numpy wraps a value past int32 silently, so
+    this check is what keeps such a value an error row."""
     if not coerce and (isinstance(v, bool) or not isinstance(v, (int, float))):
         return False
     try:
@@ -213,7 +221,9 @@ def _int32(v, coerce: bool = False) -> bool:
         return False
 
 
-# what pa.array takes for each non-null FONT_PA field (core/arrow_out.py)
+# the values core/arrow_out.py:_font_array converts for each non-null
+# FONT_PA field: int(v) into int32 buffers (range-checked here, as numpy
+# wraps), float(v) into float64 (a Python int rounds, any int64 fits)
 _FONT_FIELDS = (
     ("name", lambda v: isinstance(v, str)),
     ("flags", _int32),

@@ -149,23 +149,6 @@ def _fill_text(rb, render) -> list:
     return out
 
 
-def _string_array(strs: list):
-    """`pa.array(strs, pa.string())` for a list of str, built from its
-    buffers: pa.array imports pandas on first use (pyarrow probes every
-    input for pandas types), ~30 MB of RSS in each Python worker."""
-    import numpy as np
-    import pyarrow as pa
-
-    enc = [s.encode("utf-8") for s in strs]
-    offs = np.zeros(len(enc) + 1, dtype=np.int64)
-    np.cumsum([len(b) for b in enc], out=offs[1:])
-    if offs[-1] > np.iinfo(np.int32).max:
-        raise OverflowError(f"{offs[-1]} bytes exceed one Arrow string array")
-    return pa.StringArray.from_buffers(
-        len(enc), pa.py_buffer(offs.astype(np.int32)),
-        pa.py_buffer(b"".join(enc)))
-
-
 def _text_kernel(transcripts: DataFrame, cfg: ExtractConfig,
                  renders: dict) -> DataFrame:
     """(conv_id, turn_idx, *renders) — one string column per named
@@ -187,9 +170,11 @@ def _text_kernel(transcripts: DataFrame, cfg: ExtractConfig,
 
     def emit(batch, rb, target):
         import pyarrow as pa
+
+        from pdftext_spark.core.arrow_buffers import string_array
         return pa.RecordBatch.from_arrays(
             [batch.column("conv_id"), batch.column("turn_idx")]
-            + [_string_array(_fill_text(rb, render))
+            + [string_array(_fill_text(rb, render))
                for render in renders.values()],
             schema=target)
 

@@ -284,6 +284,7 @@ def test_malformed_payload_isolated_per_turn():
     def with_link(**kw):
         return dict(base, links=[dict(base["links"][0], **kw)])
 
+    nan, inf = float("nan"), float("inf")
     bad = [
         (dict(base, font_id=[0, 5]), "font_id"),
         (dict(base, charrot=[0.0]), "charrot"),
@@ -300,6 +301,13 @@ def test_malformed_payload_isolated_per_turn():
         (with_font(size="big"), "font size"),
         (with_link(url=5), "link url"),
         (dict(base, page_bbox=[0, 0, 1e10, 792]), "page_bbox"),
+        # "-1" would replace the last char's (rotated, so tight) box
+        (dict(base, charrot=[0, 90], tbox={"-1": [0, 0, 20, 20]}), "tbox"),
+        # non-finite numbers reach only the stdlib fallback parser
+        (dict(base, bbox=[1, 1, 2, 2, 2, 1, 3, nan]), "JSON compliant"),
+        (dict(base, bbox=[1, 1, 2, 2, -inf, 1, 3, 2]), "JSON compliant"),
+        (dict(base, bbox=[1, 1, 2, 2, 2, 1, 3, "1e400"]), "JSON compliant"),
+        (dict(base, charrot=[0, nan]), "JSON compliant"),
     ]
     # edge values both paths took before these checks: still no error
     ok = [
@@ -309,8 +317,11 @@ def test_malformed_payload_isolated_per_turn():
         with_font(flags=4.0, size=11, weight=None),
         with_font(name=None),
         dict(base, img_size=[612, 792, 1]),
+        # an int past 2**53: the float64 column holds it rounded
+        with_font(size=2**62),
     ]
-    texts = ([good] + [json.dumps(p) for p, _ in bad]
+    texts = ([good] + [json.dumps(p).replace('"1e400"', "1e400")
+                       for p, _ in bad]
              + [json.dumps(p) for p in ok])
     n = len(texts)
     outs = process_batch(texts, ["user"] * n, list(range(n)), ExtractConfig())

@@ -231,7 +231,11 @@ def test_build_session_local_only_settings(monkeypatch):
 def test_kernel_imports_leave_out_registry_and_pandas():
     """The Python workers import the kernel by reference (core.api,
     core.arrow_out, operators.extract); that closure must not load the
-    operator registry or pandas, and neither may a plain-text batch."""
+    operator registry or pandas, and neither may a plain-text batch or a
+    struct batch (keep_chars, sort) holding a NULL text, a registered
+    link, a table and an error turn: pa.array, pc.take with numpy
+    indices and Array.to_numpy() each import pandas. The plain-text
+    emit leaves out pyarrow.compute (~7 MB per worker) as well."""
     import os
     import subprocess
     import sys
@@ -239,15 +243,18 @@ def test_kernel_imports_leave_out_registry_and_pandas():
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = textwrap.dedent("""
+        import json
         import sys
 
         import numpy as np
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from pdftext_spark.config import ExtractConfig
         from pdftext_spark.core.api import route_batch
-        import pdftext_spark.core.arrow_out  # noqa: F401
-        from pdftext_spark.operators.extract import _fill_text, _string_array
+        from pdftext_spark.core.arrow_buffers import from_numpy, string_array
+        from pdftext_spark.operators.extract import _fill_text
+        from pdftext_spark.operators.schema import EXTRACTED
 
         texts = [b'prose turn', b'<p>html</p>',
                  b'{"kind":"chars","page_bbox":[0,0,9,9],"text":"a",'
@@ -257,8 +264,41 @@ def test_kernel_imports_leave_out_registry_and_pandas():
                                           pa.py_buffer(b"".join(texts)))
         rb = route_batch(arr, ["user", "tool", "user"], [0, 1, 2],
                          ExtractConfig())
-        out = _string_array(_fill_text(rb, lambda rb: rb.plains))
+        out = string_array(_fill_text(rb, lambda rb: rb.plains))
         assert out.to_pylist() == ["prose turn", "html", "a"], out
+        assert "pyarrow.compute" not in sys.modules
+
+        from pdftext_spark.core.arrow_out import assemble_record_batch
+
+        base = {"kind": "chars", "page_bbox": [0, 0, 612, 792],
+                "text": "ab", "bbox": [1, 1, 2, 2, 2, 1, 3, 2],
+                "fonts": [{"name": "A", "flags": 0, "size": 1.0,
+                           "weight": 1}]}
+        link = dict(base, links=[{"bbox": [0, 0, 4, 4], "dest_page": 3,
+                                  "dest_pos": [5, 5], "url": None}])
+        table = dict(base, tables=[[0, 0, 612, 792]], img_size=[612, 792])
+        texts = [None, json.dumps(link), json.dumps(table),
+                 json.dumps(dict(base, rotation=45))]
+        n = len(texts)
+        text_col = string_array(texts)
+        assert text_col.null_count == 1
+        target = to_arrow_schema(EXTRACTED)
+        ids = from_numpy(np.arange(n, dtype=np.int32))
+        batch = pa.RecordBatch.from_arrays(
+            [string_array(["c"] * n), ids, string_array(["user"] * n),
+             text_col, pa.nulls(n, target.field("ts").type)],
+            names=["conv_id", "turn_idx", "role", "text", "ts"])
+        cfg = ExtractConfig(keep_chars=True, sort=True)
+        rb = route_batch(batch.column("text"), ["user"] * n,
+                         list(range(n)), cfg)
+        rows = assemble_record_batch(batch, rb, cfg, target).to_pylist()
+        assert rows[0]["text"] == "" and rows[0]["error"] is None, rows[0]
+        assert rows[1]["link_dests"] == [
+            {"ord": 0, "gid": 0, "dest_page": 3, "x": 4.0, "y": 4.0}], rows[1]
+        assert rows[2]["tables"][0][0]["text"] == "ab", rows[2]["tables"]
+        assert rows[3]["error"] and rows[3]["page"] is None, rows[3]
+        assert rows[1]["page"]["blocks"][0]["lines"][0]["spans"][0][
+            "chars"][0]["char"] == "a"
         print(sorted(m for m in sys.modules if m == "pandas" or m.startswith(
             ("pdftext_spark.queries", "pdftext_spark.registry"))))
         """)
