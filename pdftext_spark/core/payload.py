@@ -94,8 +94,9 @@ def maybe_parse_payload_raw(raw) -> Optional[dict]:
             # rejects it): a strict re-encode raises UnicodeEncodeError
             # here, inside the caller's per-turn error channel. So do
             # NaN, Infinity and 1e400 (-> inf), which orjson rejects too:
-            # allow_nan=False raises ValueError instead of letting them
-            # reach the boxes
+            # allow_nan=False raises ValueError for one anywhere in the
+            # payload, read by the kernel or not, so a chars payload
+            # must be RFC 8259 JSON on either parser
             json.dumps(obj, ensure_ascii=False,
                        allow_nan=False).encode("utf-8")
             return obj

@@ -308,6 +308,9 @@ def test_malformed_payload_isolated_per_turn():
         (dict(base, bbox=[1, 1, 2, 2, -inf, 1, 3, 2]), "JSON compliant"),
         (dict(base, bbox=[1, 1, 2, 2, 2, 1, 3, "1e400"]), "JSON compliant"),
         (dict(base, charrot=[0, nan]), "JSON compliant"),
+        # ...anywhere in the payload, also where the kernel reads none
+        (with_font(size=nan), "JSON compliant"),
+        (dict(base, meta=nan), "JSON compliant"),
     ]
     # edge values both paths took before these checks: still no error
     ok = [

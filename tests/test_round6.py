@@ -235,7 +235,7 @@ def test_kernel_imports_leave_out_registry_and_pandas():
     struct batch (keep_chars, sort) holding a NULL text, a registered
     link, a table and an error turn: pa.array, pc.take with numpy
     indices and Array.to_numpy() each import pandas. The plain-text
-    emit leaves out pyarrow.compute (~7 MB per worker) as well."""
+    emit leaves out pyarrow.compute (~5.6 MB per worker) as well."""
     import os
     import subprocess
     import sys
