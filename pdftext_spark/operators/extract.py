@@ -18,9 +18,9 @@ Scale notes (the parts that must survive 1000 executors / 100 TB):
   locality for the heavy data.
 - **One heavy shuffle total.** The X1 reference registry (the only
   cross-turn operator, SURVEY.md §2.9) is resolved on a projected
-  side-table of link registrations — a few bytes per linked turn — and
-  joined back with broadcast joins; the char payloads never shuffle again
-  (operators/refs.py).
+  side-table of link registrations — one exchange of a few bytes per
+  link — and joined back with one broadcast join; the char payloads
+  never shuffle again (operators/refs.py).
 - **Python boundary**: exactly one Arrow round-trip for the kernel
   (extract() caches its output for the refs registry); url/ref
   rewriting is a pure JVM-side columnar projection over the cache.

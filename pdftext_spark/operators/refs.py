@@ -4,84 +4,114 @@ The reference keeps a PageReference registry that grows across the pages
 of one document (schema.py:205-225, pdf/links.py:224-231). Per-turn
 extraction emits (a) integer-only placeholder urls `#goto|turn|gid`
 inside spans and (b) a tiny `link_dests` side column. This operator is
-**100 % JVM-side**:
+**100 % JVM-side**, and it touches `link_dests` once:
 
-1. aggregate `link_dests` into the registry — first-arrival dedup on
-   (conv_id, dest_page, coord), idx = arrival rank per dest page — two
-   window functions over a table whose size is O(#links), not O(#chars);
-2. broadcast-join the per-turn url map and per-turn refs arrays back;
-3. rewrite span urls / attach refs with nested `transform` expressions —
-   a pure columnar projection, no second Arrow round-trip for the heavy
-   nested page column (which also dodges a pyarrow segfault on
-   arrow→pandas for this depth of nesting).
+1. one scan explodes `link_dests` into registrations, and ONE exchange
+   (`repartition(conv_id)`) places each conversation in one partition;
+   every later window and group clusters on a superset of `conv_id`, so
+   no other exchange follows;
+2. two windows give each registration its coord's first arrival
+   `min((turn_idx, ord))` and its registry index, the dense rank of
+   (first arrival, x, y) on its dest page — the add_ref semantics of
+   schema.py:212-225 (first arrival wins, idx = arrival rank);
+3. each registration yields a url-map entry at its own turn and, on its
+   coord's first arrival, a ref at its dest page; ONE group by
+   (conv_id, turn_idx) folds them into one side table (url_map,
+   page_refs) with a row per linked or linked-to turn;
+4. the side table meets the cached kernel output in ONE left join, and
+   one SQL projection rewrites span urls and attaches refs with nested
+   `transform` — no second Arrow round-trip for the heavy nested page
+   column, which never shuffles.
 
-At 10^12 turns the registry is usually millions of rows — small enough
-to broadcast — but on link-dense corpora the per-turn url-map table is
-O(linked turns) and a hard-forced broadcast would OOM the driver instead
-of degrading. `resolve_refs` therefore counts the registrations (a
-column-pruned scan of the tiny `link_dests` column) and drops the
-`F.broadcast` hints above `BROADCAST_THRESHOLD`, letting AQE pick a
-broadcast or sort-merge join on (conv_id, turn_idx) at runtime. On the
-fallback path the two side tables are pre-merged into ONE per-(conv,
-turn) table so the heavy nested page column meets exactly one join; the
-broadcast hot path keeps two independent broadcast builds (measured
-faster than pre-merging — zero data shuffles either way there).
+At 10^12 turns the side table is usually millions of rows — small enough
+to broadcast — but on link-dense corpora it is O(linked turns) and a
+hard-forced broadcast would OOM the driver instead of degrading.
+`resolve_refs` therefore counts the registrations (a column-pruned scan
+of the tiny `link_dests` column) and drops the `F.broadcast` hint above
+`BROADCAST_THRESHOLD`, letting AQE pick a broadcast or sort-merge join on
+(conv_id, turn_idx) at runtime. Either way the plan holds at most one
+broadcast relation: each one pins a `spark.buffer.pageSize` page (64 MB
+under an 8 GB driver) on the driver heap for as long as the plan is
+referenced, however small the table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdftext_spark.operators.schema import PAGE
 
+# Each registration yields its url-map entry at its own turn and, when it
+# is its coord's first arrival, the coord's ref at its dest page (with the
+# first arrival's x and y: -0.0 and 0.0 are one coord).
+_SIDE_ROWS = """inline(filter(array(
+  named_struct('turn_idx', turn_idx,
+    'u', named_struct(
+      'k', concat('#goto|', CAST(turn_idx AS STRING), '|', CAST(gid AS STRING)),
+      'v', concat('#page-', CAST(dest_page AS STRING), '-', CAST(idx AS STRING))),
+    'r', CAST(NULL AS STRUCT<idx: INT, x: DOUBLE, y: DOUBLE>)),
+  IF(named_struct('turn_idx', turn_idx, 'ord', ord) = first_at,
+     named_struct('turn_idx', dest_page,
+       'u', CAST(NULL AS STRUCT<k: STRING, v: STRING>),
+       'r', named_struct('idx', idx, 'x', x, 'y', y)),
+     NULL)), e -> e IS NOT NULL))"""
 
-def _registrations(extracted: DataFrame) -> DataFrame:
+# placeholder urls -> '#page-<dest>-<idx>'; refs pointing to this page
+_PAGE_REWRITE = f"""IF(page IS NULL, NULL, CAST(named_struct(
+  'page', page.page, 'bbox', page.bbox, 'width', page.width,
+  'height', page.height, 'rotation', page.rotation,
+  'blocks', IF(url_map IS NULL, page.blocks, transform(page.blocks,
+    b -> named_struct('bbox', b.bbox, 'lines', transform(b.lines,
+      ln -> named_struct('bbox', ln.bbox, 'spans', transform(ln.spans,
+        s -> named_struct(
+          'bbox', s.bbox, 'text', s.text, 'font', s.font,
+          'char_start_idx', s.char_start_idx, 'char_end_idx', s.char_end_idx,
+          'rotation', s.rotation,
+          'url', coalesce(element_at(url_map, s.url), s.url),
+          'superscript', s.superscript, 'subscript', s.subscript,
+          'chars', s.chars))))))),
+  'refs', IF(page_refs IS NULL, page.refs, transform(page_refs,
+    r -> named_struct(
+      'idx', r.idx, 'page', page.page, 'coord', array(r.x, r.y),
+      'ref', concat('page-', CAST(page.page AS STRING), '-', CAST(r.idx AS STRING)),
+      'url', concat('#page-', CAST(page.page AS STRING), '-', CAST(r.idx AS STRING)))))
+) AS {PAGE.simpleString()})) AS page"""
+
+
+def registry_side_table(extracted: DataFrame) -> DataFrame:
+    """(conv_id, turn_idx, url_map, page_refs) — one row per turn that
+    registers a link or is linked to. url_map maps the turn's placeholder
+    urls to final urls; page_refs is the sorted (idx, x, y) array of refs
+    pointing to the turn. A turn with nothing of one kind has NULL there.
+
+    Sets fold the repeats: a `(conv_id, turn_idx)` key that repeats in the
+    input repeats its registrations, first arrivals included."""
     return (extracted
-            .where(F.size("link_dests") > 0)
             .select("conv_id", "turn_idx", F.explode("link_dests").alias("r"))
             .select("conv_id", "turn_idx", "r.ord", "r.gid", "r.dest_page",
-                    "r.x", "r.y"))
+                    "r.x", "r.y")
+            .repartition("conv_id")
+            .selectExpr(
+                "*",
+                "min(named_struct('turn_idx', turn_idx, 'ord', ord)) OVER "
+                "(PARTITION BY conv_id, dest_page, x, y) AS first_at")
+            .selectExpr(
+                "*",
+                "dense_rank() OVER (PARTITION BY conv_id, dest_page "
+                "ORDER BY first_at, x, y) - 1 AS idx")
+            .selectExpr("conv_id", _SIDE_ROWS)
+            .groupBy("conv_id", "turn_idx")
+            .agg(F.collect_set("u").alias("u"), F.collect_set("r").alias("r"))
+            .selectExpr(
+                "conv_id", "turn_idx",
+                "IF(size(u) > 0, map_from_entries(u), NULL) AS url_map",
+                "IF(size(r) > 0, sort_array(r), NULL) AS page_refs"))
 
 
-def _firsts(regs: DataFrame) -> DataFrame:
-    """Deduped registry: one row per distinct (conv, dest_page, coord) with
-    its arrival-rank idx — the add_ref semantics of schema.py:212-225."""
-    w_first = (Window.partitionBy("conv_id", "dest_page", "x", "y")
-               .orderBy("turn_idx", "ord"))
-    w_idx = Window.partitionBy("conv_id", "dest_page").orderBy("turn_idx", "ord")
-    return (regs.withColumn("rn", F.row_number().over(w_first))
-            .where(F.col("rn") == 1).drop("rn")
-            .withColumn("idx", F.row_number().over(w_idx) - 1))
-
-
-def build_registry(extracted: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, gid, dest_page, idx) — every registration with
-    its resolved registry index (dedup on coords, first-arrival order)."""
-    regs = _registrations(extracted)
-    return (regs.join(_firsts(regs).select("conv_id", "dest_page", "x", "y", "idx"),
-                      on=["conv_id", "dest_page", "x", "y"], how="inner")
-            .select("conv_id", "turn_idx", "gid", "dest_page", "idx"))
-
-
-def _span_with_url(s: Column, url_map: Column) -> Column:
-    return F.struct(
-        s["bbox"].alias("bbox"),
-        s["text"].alias("text"),
-        s["font"].alias("font"),
-        s["char_start_idx"].alias("char_start_idx"),
-        s["char_end_idx"].alias("char_end_idx"),
-        s["rotation"].alias("rotation"),
-        F.coalesce(F.element_at(url_map, s["url"]), s["url"]).alias("url"),
-        s["superscript"].alias("superscript"),
-        s["subscript"].alias("subscript"),
-        s["chars"].alias("chars"),
-    )
-
-
-# Above this many registrations the per-turn url-map / target tables stop
-# being "obviously driver-safe" (rule of thumb: ~100 bytes/row -> ~500 MB
-# at 5e6, within spark.sql.autoBroadcastJoinThreshold territory but not a
+# Above this many registrations the side table stops being "obviously
+# driver-safe" (rule of thumb: ~100 bytes/registration -> ~500 MB at 5e6,
+# within spark.sql.autoBroadcastJoinThreshold territory but not a
 # forced-broadcast bet). AQE decides from real runtime sizes beyond it.
 BROADCAST_THRESHOLD = 5_000_000
 
@@ -96,25 +126,7 @@ def resolve_refs(extracted: DataFrame, persist: bool = True) -> DataFrame:
     if persist:
         extracted = extracted.persist()
         persisted.append(extracted)
-    registry = build_registry(extracted)
-
-    # per-turn url maps: placeholder '#goto|turn|gid' -> '#page-dest-idx'
-    url_maps = (registry
-                .select("conv_id", "turn_idx", "gid", "dest_page", "idx")
-                .distinct()
-                .groupBy("conv_id", "turn_idx")
-                .agg(F.map_from_entries(F.collect_list(F.struct(
-                    F.concat(F.lit("#goto|"), F.col("turn_idx").cast("string"),
-                             F.lit("|"), F.col("gid").cast("string")).alias("k"),
-                    F.concat(F.lit("#page-"), F.col("dest_page").cast("string"),
-                             F.lit("-"), F.col("idx").cast("string")).alias("v"),
-                ))).alias("url_map")))
-
-    # per-target-turn refs arrays (refs POINTING TO that turn)
-    targets = (_firsts(_registrations(extracted))
-               .groupBy("conv_id", F.col("dest_page").alias("turn_idx"))
-               .agg(F.sort_array(F.collect_list(F.struct("idx", "x", "y")))
-                    .alias("page_refs")))
+    side = registry_side_table(extracted)
 
     # Broadcast size gate (VERDICT r2): a hard-forced broadcast on a
     # link-dense corpus OOMs the driver instead of degrading. The
@@ -125,71 +137,12 @@ def resolve_refs(extracted: DataFrame, persist: bool = True) -> DataFrame:
                                .alias("n"))
               .agg(F.sum("n")).collect()[0][0] or 0)
     if n_regs <= BROADCAST_THRESHOLD:
-        # hot path: two independent broadcast builds, zero data shuffles
-        # (measured faster than pre-merging them into one side table —
-        # the full_outer merge serializes the two agg pipelines behind a
-        # shuffle join before anything can broadcast)
-        out = (extracted.alias("e")
-               .join(F.broadcast(url_maps.alias("u")),
-                     on=[F.col("e.conv_id") == F.col("u.conv_id"),
-                         F.col("e.turn_idx") == F.col("u.turn_idx")],
-                     how="left")
-               .join(F.broadcast(targets.alias("t")),
-                     on=[F.col("e.conv_id") == F.col("t.conv_id"),
-                         F.col("e.turn_idx") == F.col("t.turn_idx")],
-                     how="left"))
-        page_refs = F.col("t.page_refs")
-    else:
-        # fallback (link-dense corpus): pre-merge the two side tables so
-        # the heavy page column meets exactly ONE sort-merge join instead
-        # of two; AQE may still convert it to broadcast at runtime
-        side = url_maps.join(targets, on=["conv_id", "turn_idx"],
-                             how="full_outer")
-        out = (extracted.alias("e")
-               .join(side.alias("u"),
-                     on=[F.col("e.conv_id") == F.col("u.conv_id"),
-                         F.col("e.turn_idx") == F.col("u.turn_idx")],
-                     how="left"))
-        page_refs = F.col("u.page_refs")
+        side = F.broadcast(side)
 
-    page = F.col("e.page")
-    url_map = F.col("u.url_map")
-    refs_col = F.when(
-        page_refs.isNotNull(),
-        F.transform(page_refs, lambda r: F.struct(
-            r["idx"].alias("idx"),
-            page["page"].alias("page"),
-            F.array(r["x"], r["y"]).alias("coord"),
-            F.concat(F.lit("page-"), page["page"].cast("string"), F.lit("-"),
-                     r["idx"].cast("string")).alias("ref"),
-            F.concat(F.lit("#page-"), page["page"].cast("string"), F.lit("-"),
-                     r["idx"].cast("string")).alias("url"),
-        ))
-    ).otherwise(page["refs"])
-
-    blocks_col = F.when(url_map.isNotNull(), F.transform(
-        page["blocks"], lambda b: F.struct(
-            b["bbox"].alias("bbox"),
-            F.transform(b["lines"], lambda ln: F.struct(
-                ln["bbox"].alias("bbox"),
-                F.transform(ln["spans"], lambda s: _span_with_url(s, url_map))
-                .alias("spans"),
-            )).alias("lines"),
-        ))).otherwise(page["blocks"])
-
-    new_page = F.when(page.isNotNull(), F.struct(
-        page["page"].alias("page"),
-        page["bbox"].alias("bbox"),
-        page["width"].alias("width"),
-        page["height"].alias("height"),
-        page["rotation"].alias("rotation"),
-        blocks_col.alias("blocks"),
-        refs_col.alias("refs"),
-    ).cast(PAGE)).otherwise(F.lit(None).cast(PAGE))
-
-    keep = [F.col(f"e.{c}").alias(c) for c in extracted.columns if c != "page"]
-    result = out.select(*keep, new_page.alias("page")) \
-        .select(*extracted.columns)  # restore original column order
+    cols = [_PAGE_REWRITE if c == "page" else f"`{c}`"
+            for c in extracted.columns]
+    result = (extracted.join(side, on=["conv_id", "turn_idx"], how="left")
+              .selectExpr(*cols))
     # handle for cache-eviction seams (queries.unpersist_tier /
     # release_persisted below): the persist above is internal, so callers
     # need this to release storage memory

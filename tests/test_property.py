@@ -6,15 +6,20 @@ rotation mixes, hyphen/newline storms, random links) at both
 implementations and require bit-exact agreement.
 """
 
+import copy
 import json
 import os
 
 import hypothesis.strategies as st
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, Phase, given, settings
 
 from pdftext_spark.config import ExtractConfig
 from pdftext_spark.core.api import process_batch
-from pdftext_spark.core.links import resolve_conversation_refs, rewrite_page_urls
+from pdftext_spark.core.links import (
+    goto_placeholder,
+    resolve_conversation_refs,
+    rewrite_page_urls,
+)
 from pdftext_spark.core.textproc import handle_hyphens, postprocess_text
 from tests.oracle_naive import hyphens_text, oracle_dictionary, oracle_plain, pp_text
 from tests.test_core_parity import deep_eq
@@ -403,3 +408,112 @@ def test_repeated_intervals_matches_naive_window_oracle(texts):
             expected.append((di, s, prev + w - 1))
     got = repeated_intervals(toks, w)
     assert sorted(got) == sorted(expected)
+
+
+# X1 registry cases: a registration is (dest_page, coord); a conversation
+# is up to 5 turns (turn_idx = position), each with or without a page. Page
+# 5 never exists; the small coord pool repeats coords within and across
+# turns and on different dest pages, and holds -0.0, which equals 0.0.
+_reg_st = st.tuples(st.integers(0, 5),
+                    st.sampled_from([(0.0, 0.0), (-0.0, 0.0), (72.0, 100.0),
+                                     (3.5, 3.5)]))
+_conv_st = st.lists(st.tuples(st.sampled_from([True, True, True, False]),
+                              st.lists(_reg_st, max_size=4)),
+                    min_size=1, max_size=5)
+_FONT = {"name": "A", "flags": 4, "size": 11.0, "weight": 400}
+_UNIT = [0.0, 0.0, 1.0, 1.0]
+
+
+def _drawn_conversations(n: int) -> list:
+    """n Hypothesis-generated conversations, drawn up front so that the
+    Spark side resolves them all in one pass."""
+    convs = []
+
+    @settings(max_examples=n, derandomize=True, database=None,
+              deadline=None, phases=[Phase.generate],
+              suppress_health_check=list(HealthCheck))
+    @given(_conv_st)
+    def draw(conv):
+        convs.append(conv)
+
+    draw()
+    return convs
+
+
+def _registry_rows(cid: str, conv: list) -> tuple[list, dict, list]:
+    """EXTRACTED-shaped rows of one conversation (minimal pages whose spans
+    carry the turn's placeholder urls, a NULL url and an external url),
+    the pages resolve_conversation_refs expects, and the registrations."""
+    rows, regs, pages = [], [], {}
+    for t, (has_page, dests) in enumerate(conv):
+        gids: dict = {}
+        links = []
+        for k, (dest, (x, y)) in enumerate(dests if has_page else []):
+            gid = gids.setdefault((dest, x, y), len(gids))
+            links.append({"ord": 2 * k, "gid": gid, "dest_page": dest,
+                          "x": x, "y": y})
+            regs.append((t, 2 * k, gid, dest, x, y))
+        urls = [goto_placeholder(t, g) for g in range(len(gids))]
+        spans = [{"bbox": _UNIT, "text": "a", "font": _FONT,
+                  "char_start_idx": 0, "char_end_idx": 0, "rotation": 0.0,
+                  "url": u, "superscript": False, "subscript": False,
+                  "chars": None}
+                 for u in urls + [None, "https://x.example/a"]]
+        page = None
+        if has_page:
+            page = pages[t] = {
+                "page": t, "bbox": [0.0, 0.0, 100.0, 100.0], "width": 100,
+                "height": 100, "rotation": 0,
+                "blocks": [{"bbox": _UNIT,
+                            "lines": [{"bbox": _UNIT, "spans": spans}]}],
+                "refs": []}
+        rows.append((cid, t, "user", None, "a", not has_page, page, [],
+                     links, None, 1, len(spans), 1))
+    url_map, refs_by_page = resolve_conversation_refs(regs)
+    expected = {}
+    for t, page in pages.items():
+        expected[t] = copy.deepcopy(page)
+        rewrite_page_urls(expected[t], url_map, refs_by_page)
+    return rows, expected, regs
+
+
+def test_registry_matches_python_reference(spark):
+    """operators/refs.py resolves every conversation's span urls and page
+    refs exactly as core/links.resolve_conversation_refs does in
+    (turn_idx, ord) order: first arrival wins per (dest_page, coord), idx
+    is the arrival rank on the dest page. All conversations share one
+    DataFrame, so one resolve_refs pass checks them all."""
+    from pdftext_spark.operators.refs import resolve_refs
+    from pdftext_spark.operators.schema import EXTRACTED
+
+    convs = _drawn_conversations(250)
+    assert len(convs) >= 200
+    rows, expected, seen = [], {}, set()
+    for i, conv in enumerate(convs):
+        cid = f"c{i}"
+        conv_rows, pages, regs = _registry_rows(cid, conv)
+        rows += conv_rows
+        expected.update({(cid, t): p for t, p in pages.items()})
+        coords = [(t, d, x, y) for t, _, _, d, x, y in regs]
+        sources = {t for t, *_ in coords}
+        targets = {d for _, d, *_ in coords}
+        if len(coords) > len(set(coords)):
+            seen.add("coord twice in a turn")
+        if len({(d, x, y) for _, d, x, y in coords}) < len(set(coords)):
+            seen.add("coord in two turns")
+        if len({(x, y) for *_, x, y in coords}) < len(
+                {(d, x, y) for _, d, x, y in coords}):
+            seen.add("coord on two dest pages")
+        if sources & targets:
+            seen.add("turn is source and target")
+        if (targets - sources) & set(pages):
+            seen.add("target without links")
+    assert len(seen) == 5, seen
+
+    df = spark.createDataFrame(rows, EXTRACTED)
+    got = {(r["conv_id"], r["turn_idx"]): r.asDict(recursive=True)["page"]
+           for r in resolve_refs(df, persist=False).collect()}
+    assert len(got) == len(rows)
+    for key, page in expected.items():
+        assert got[key] == page, key
+    assert sum(bool(p["refs"]) for p in expected.values()) > 100
